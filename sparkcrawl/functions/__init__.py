@@ -9,7 +9,6 @@ from sparkcrawl.functions.urlnorm import (
     canonicalize_series,
     canonicalize_udf,
     host_of_canonical_col,
-    host_of_udf,
     strip_session_ids,
     with_canonical_host,
 )
@@ -18,7 +17,6 @@ __all__ = [
     "canonicalize_series",
     "canonicalize_udf",
     "host_of_canonical_col",
-    "host_of_udf",
     "md5_bucket",
     "queue_for_domain",
     "strip_session_ids",

@@ -63,9 +63,11 @@ def canonicalize_one(url: str, base: str | None = None) -> str | None:
         return None
     scheme = parts.scheme.lower()
     host = host.lower() if host else ""
-    netloc = host
+    # .hostname drops an IPv6 literal's brackets; without them the
+    # output's port parse fails and a re-canonicalization returns None
+    netloc = f"[{host}]" if ":" in host else host
     if port is not None and str(port) != _DEFAULT_PORTS.get(scheme, ""):
-        netloc = f"{host}:{port}"
+        netloc = f"{netloc}:{port}"
     if parts.username:
         cred = parts.username + (f":{parts.password}" if parts.password else "")
         netloc = f"{cred}@{netloc}"
@@ -88,7 +90,11 @@ def canonicalize_one(url: str, base: str | None = None) -> str | None:
     pairs = parse_qsl(parts.query, keep_blank_values=False)
     pairs = strip_session_ids(pairs)
     query = urlencode(pairs)
-    return urlunsplit((scheme, netloc, path, query, ""))  # "" drops the fragment
+    # "" drops the fragment. A dropped query/fragment can leave the path
+    # ending in whitespace ("http://h/ #"), which the leading strip()
+    # would remove on a second pass: strip it now, so the output is a
+    # fixed point and its url_hash is the one stored.
+    return urlunsplit((scheme, netloc, path, query, "")).rstrip()
 
 
 # Fast-path predicate: URLs canonicalize_one provably maps to themselves —
@@ -156,8 +162,8 @@ def _host_one(u: str | None) -> str | None:
 
 def host_of_canonical_series(canon: pd.Series) -> pd.Series:
     # .str.lower() keeps the fast path correct for not-yet-canonical
-    # input too (urlsplit().hostname lowercases): idempotent on
-    # canonical hosts, so host_of_udf can share this path.
+    # input too (urlsplit().hostname lowercases); idempotent on
+    # canonical hosts.
     hosts = canon.str.extract(_HOST_OF_CANON_RE, expand=False).str.lower()
     bad = (hosts.isna() & canon.notna()) | (hosts == "")
     if bad.any():
@@ -172,17 +178,6 @@ def canonicalize_with_host_udf(urls: pd.Series) -> pd.DataFrame:
     both halves are vectorized with C-level regex fast paths."""
     canon = canonicalize_series(urls)
     return pd.DataFrame({"url": canon, "host": host_of_canonical_series(canon)})
-
-
-@F.pandas_udf(T.StringType())
-def host_of_udf(urls: pd.Series) -> pd.Series:
-    """Lowercased netloc host — the reference's queue-assignment key (C9).
-
-    Vectorized via the C-regex fast path (host_of_canonical_series);
-    rows the regex can't handle (bracketed IPv6, uppercase scheme)
-    fall back to per-row urlsplit — identical semantics, ~10x cheaper
-    on the per-discovered-link hot path."""
-    return host_of_canonical_series(urls)
 
 
 # ---------------------------------------------------------------------------
@@ -223,15 +218,6 @@ JVM_FAST_CANON_PATTERN = (
     r"(?:/(?:[A-Za-z0-9/._~%\-]++|" + _SESSION_PARAM_JAVA + r")*+)?+"
     r"(?:#.*)?\z"
 )
-
-# host-of-canonical gate: lowercase scheme, no userinfo/port/IPv6 in the
-# authority (negated class bans @ : [ ]), then anything starting with
-# / ? # or end-of-string. Canonical URLs (our own output) always pass;
-# uppercase schemes / IPv6 / ports fall through to the pandas UDF.
-JVM_CANON_HOST_PATTERN = (
-    r"\A[a-z][a-z0-9+.\-]*+://[^/?#@:\[\]]*+(?:[/?#].*)?\z"
-)
-
 
 def _jvm_canon_host_struct(u):
     """(url, host) struct for rows matched by JVM_FAST_CANON_PATTERN.
@@ -284,11 +270,19 @@ def with_canonical_host(df, url_col: str = "url",
 
 
 def host_of_canonical_col(u):
-    """Hybrid host-of-canonical-URL column: JVM regexp_extract for the
-    no-userinfo/no-port/no-IPv6 class (all of this engine's own canonical
-    output), pandas UDF for the rest. Same NULL-gated single-pass shape
-    as :func:`with_canonical_host`."""
-    is_fast = u.rlike(JVM_CANON_HOST_PATTERN)
-    fast = F.lower(F.regexp_extract(u, r"^[a-z][a-z0-9+.\-]*://([^/?#]*)", 1))
-    slow = host_of_udf(F.when(is_fast, F.lit(None).cast("string")).otherwise(u))
-    return F.when(is_fast, fast).otherwise(slow)
+    """Lowercased ``urlsplit(u).hostname`` ('' when there is none, NULL
+    for NULL) in pure Catalyst expressions: no Python lane, so it stays
+    inside whole-stage codegen. It mirrors urlsplit step by step: strip
+    leading C0/space, drop tab/CR/LF, take an optional scheme (a letter,
+    then scheme characters, up to the first ':'), then the authority
+    after '//' up to the first '/', '?' or '#'; the host is what follows
+    the authority's last '@', inside the first '[...]' if there is one,
+    else up to the first ':'. Where urlsplit would raise (unbalanced or
+    invalid IPv6 brackets) this returns that same split instead."""
+    s = F.regexp_replace(F.regexp_replace(u, r"^[\x00-\x20]+", ""), r"[\t\r\n]", "")
+    netloc = F.regexp_extract(s, r"^(?:[A-Za-z][A-Za-z0-9+.\-]*:)?//([^/?#]*)", 1)
+    hostinfo = F.substring_index(netloc, "@", -1)
+    host = F.when(
+        hostinfo.contains("["), F.regexp_extract(hostinfo, r"\[([^\]]*)", 1)
+    ).otherwise(F.substring_index(hostinfo, ":", 1))
+    return F.lower(host)

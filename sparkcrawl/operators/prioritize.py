@@ -84,7 +84,6 @@ def apply_outcomes(fetched: DataFrame, virtual_time, cfg: CrawlConfig) -> DataFr
         new_error_count.alias("error_count"),
         new_state.alias("state"),
         "discovered_superstep",
-        "lineage_partition",
     )
 
 

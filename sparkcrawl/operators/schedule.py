@@ -276,10 +276,14 @@ def select_fetch_batch(
         return politeness_slots(batch, cfg, crawl_delays)
 
     elig = eligible(frontier, virtual_time)
+    k = min(cfg.heap_size, cfg.per_queue_budget)
+    if cfg.active_queues >= cfg.num_queues:
+        # queue ids lie in [0, num_queues): the top active_queues of at
+        # most num_queues queues are all of them, so skip the take
+        return _slotted(per_queue_topk(elig, cfg, k, carry))
     act = active_queues(elig, cfg)
     if not act:
         return _slotted(elig.limit(0))
-    k = min(cfg.heap_size, cfg.per_queue_budget)
     picked = per_queue_topk(elig.filter(F.col("queue").isin(act)), cfg, k, carry)
     return _slotted(picked)
 

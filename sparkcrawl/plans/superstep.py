@@ -9,8 +9,8 @@ with a deterministic driver loop; one superstep =
   3 POLITE      robots gate + per-host slotting                  R2,W3
   4 FETCH       synthetic/HTTP fetch                             S4,J4
   5 EXTRACT     links + interleaved spans -> documents append    C3,C5,S6
-  6 CANON+HASH  canonicalize + sha1 discovered links             C1,C2
-  7 DEDUP       batch distinct -> bloom prefilter -> anti-join   U2,F1,J1
+  6 KEYS        sha1 + queue of the (canonical) discovered links C1,C2
+  7 DEDUP       batch distinct -> [bloom prefilter] -> anti-join U2,F1,J1
   8 PRIORITIZE  requeue math + error backoff                     C8,T4
   9 MERGE       frontier' = requeued ∪ denied ∪ new              U1,J3
  10 CHECKPOINT  snapshot + counters                              T5,A3
@@ -91,11 +91,39 @@ def _registered_domain_col(cfg: CrawlConfig):
     return F.col("host")
 
 
+def with_frontier_keys(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    """C2+Q2 on canonical (url, host) rows: add url_hash,
+    registered_domain and queue — the keys dedup and the merge share."""
+    return (
+        df.withColumn("url_hash", url_sha1(F.col("url")))
+        .withColumn("registered_domain", _registered_domain_col(cfg))
+        .withColumn("queue", queue_for_domain(F.col("registered_domain"), cfg.num_queues))
+    )
+
+
+def new_frontier_rows(keyed: DataFrame, superstep: int, t0: datetime,
+                      priority_col=None) -> DataFrame:
+    """Frontier-schema rows for never-seen URLs from keyed
+    (url, url_hash, host, registered_domain, queue) rows."""
+    prio = priority_col if priority_col is not None else F.lit(1)
+    return keyed.select(
+        "url", "url_hash", "host", "registered_domain", "queue",
+        F.lit(None).cast("string").alias("etag"),
+        F.lit(None).cast("timestamp").alias("mod_date"),
+        F.lit(t0).alias("next_date"),
+        prio.cast("int").alias("priority"),
+        F.lit(0).alias("error_count"),
+        F.lit("pending").alias("state"),
+        F.lit(superstep).alias("discovered_superstep"),
+    )
+
+
 def frontier_rows_from_urls(
     urls: DataFrame, cfg: CrawlConfig, superstep: int, t0: datetime, priority_col=None
 ) -> DataFrame:
-    """C1+C2+Q2 on a (url[, priority]) DataFrame -> frontier-schema rows."""
-    prio = priority_col if priority_col is not None else F.lit(1)
+    """C1+C2+Q2 on a raw (url[, priority]) DataFrame -> frontier-schema
+    rows. For seeds and control/stream injections; discovered links are
+    already canonical and skip this (see run_superstep step 6)."""
     # unparseable URLs canonicalize to NULL and are dropped (one bad
     # seed/link must never produce a null-hash frontier row).
     # Hybrid canonicalize+host (urlnorm.with_canonical_host): the JVM
@@ -103,24 +131,7 @@ def frontier_rows_from_urls(
     # the slow minority's strings (NULL-gated argument), one Arrow
     # round-trip, one pass over the input.
     canon = with_canonical_host(urls).filter(F.col("url").isNotNull())
-    return (
-        canon.withColumn("url_hash", url_sha1(F.col("url")))
-        .withColumn("registered_domain", _registered_domain_col(cfg))
-        .withColumn("queue", queue_for_domain(F.col("registered_domain"), cfg.num_queues))
-        .withColumn("etag", F.lit(None).cast("string"))
-        .withColumn("mod_date", F.lit(None).cast("timestamp"))
-        .withColumn("next_date", F.lit(t0))
-        .withColumn("priority", prio.cast("int"))
-        .withColumn("error_count", F.lit(0))
-        .withColumn("state", F.lit("pending"))
-        .withColumn("discovered_superstep", F.lit(superstep))
-        .withColumn("lineage_partition", F.spark_partition_id())
-        .select(
-            "url", "url_hash", "host", "registered_domain", "queue", "etag",
-            "mod_date", "next_date", "priority", "error_count", "state",
-            "discovered_superstep", "lineage_partition",
-        )
-    )
+    return new_frontier_rows(with_frontier_keys(canon, cfg), superstep, t0, priority_col)
 
 
 class CrawlRun:
@@ -211,23 +222,23 @@ class CrawlRun:
             t0=self.cfg.t0,
             priority_col=F.col("priority"),
         )
-        rows = batch_distinct(rows)
+        rows = batch_distinct(rows).persist()
         if self.cfg.use_bloom_prefilter:
             # bloom BEFORE merge: superset invariant (see run_superstep)
-            rows = rows.persist()
             self.bloom_store.update(
                 rows.select("url_hash"), channel="bootstrap", superstep=0
             )
         self.frontier.merge(rows, superstep=0, tag="bootstrap")
         self.checkpoints.commit(
             self.spark, 0, self.cfg.t0, f"frontier-v{self.frontier.store.version}",
-            {"urls_seen": rows.count(), "fetched": 0, "discovered": 0}, {},
+            {"urls_seen": rows.count(), "fetched": 0, "discovered": 0},
             frontier_snapshot=self.frontier.store.snapshot(),
             queue_state_snapshot=(
                 self.queue_state.store.snapshot()
                 if self.queue_state is not None else None
             ),
         )
+        rows.unpersist()
 
     # -- resume state --------------------------------------------------------
     def last_checkpoint(self) -> dict | None:
@@ -357,7 +368,7 @@ class CrawlRun:
         fetch_cols = [
             "url", "url_hash", "host", "registered_domain", "queue", "etag",
             "mod_date", "next_date", "priority", "error_count", "state",
-            "discovered_superstep", "lineage_partition", "slot",
+            "discovered_superstep", "slot",
         ]
         batch_to_fetch = allowed.select(*fetch_cols)
         fetched = self._dispatch_fetch(batch_to_fetch)
@@ -436,6 +447,14 @@ class CrawlRun:
             links = links.withColumn(
                 "url", dust_rewrite_column(F.col("url"), self.dust_rules)
             )
+        if self.dust_rules or cfg.extractor_pipeline:
+            # opt-in rewriters (a DUST substring rewrite, a pipeline
+            # stage) need not keep a link canonical: canonicalize once
+            # more here, before the keys are taken
+            links = with_canonical_host(links).filter(F.col("url").isNotNull())
+            host = F.col("host")
+        else:
+            host = host_of_canonical_col(F.col("url"))
         if self.trap_rules is not None:
             # trap gate: codegen shape filter + broadcast anti-join
             # against templates published by plans/traps.py
@@ -444,12 +463,10 @@ class CrawlRun:
             links = filter_trap_candidates(
                 links, cfg, self.trap_rules.read(spark)
             )
-        candidates = (
-            links.withColumn("url_hash", url_sha1(F.col("url")))
-            .withColumn("host", host_of_canonical_col(F.col("url")))
-            .withColumn("registered_domain", _registered_domain_col(cfg))
-            .withColumn("queue", queue_for_domain(F.col("registered_domain"), cfg.num_queues))
-        )
+        # canonicalized ONCE: these keys are both the dedup key and the
+        # stored frontier row (new_rows below is a projection), so a URL
+        # can never dedup under one hash and land under another
+        candidates = with_frontier_keys(links.withColumn("host", host), cfg)
 
         if self.link_edges is not None:
             # host->host edges for the offline PageRank refresh
@@ -472,9 +489,11 @@ class CrawlRun:
             )
             self.link_edges.append(edges, superstep)
 
-        # 7: DEDUP — batch distinct, persisted bloom prefilter (loaded, not
-        # rebuilt: O(new) per superstep, M4), authoritative anti-join
-        distinct_cands = batch_distinct(candidates)
+        # 7: DEDUP — batch distinct, optional persisted bloom prefilter
+        # (loaded, not rebuilt: O(new) per superstep, M4), authoritative
+        # anti-join. Both results are persisted: the merge, the bloom
+        # update and the checkpoint counters all read them.
+        distinct_cands = batch_distinct(candidates).persist()
         seen = self.frontier.seen_keys(spark, snapshot=as_of)
         bloom = None
         if cfg.use_bloom_prefilter:
@@ -485,13 +504,11 @@ class CrawlRun:
                 # bloom re-admits seen URLs) — rebuild once from the
                 # authoritative key set.
                 bloom = self.bloom_store.update(seen, channel="rebuild")
-        new_urls = filter_unseen(distinct_cands, seen, cfg, bloom)
-        new_rows = frontier_rows_from_urls(
-            new_urls.select("url"),
-            cfg,
+        new_rows = new_frontier_rows(
+            filter_unseen(distinct_cands, seen, cfg, bloom),
             superstep=superstep,
             t0=virtual_time + timedelta(seconds=cfg.tick_seconds),
-        )
+        ).persist()
 
         # 8: PRIORITIZE requeues
         requeued = apply_outcomes(fetched_to_outcomes(extracted), virtual_time, cfg)
@@ -502,7 +519,7 @@ class CrawlRun:
             "url", "url_hash", "host", "registered_domain", "queue", "etag",
             "mod_date", "next_date", "priority", "error_count", "state",
         ).join(
-            batch.select("url_hash", "discovered_superstep", "lineage_partition"),
+            batch.select("url_hash", "discovered_superstep"),
             "url_hash",
         ).select(*[f.name for f in new_rows.schema.fields])
 
@@ -530,7 +547,6 @@ class CrawlRun:
             # rows would re-admit them (dedup violation). A kill between
             # bloom update and merge leaves extra hashes in the bloom,
             # which only costs anti-join probes (tests/test_membership.py).
-            new_rows = new_rows.persist()
             self.bloom_store.update(
                 new_rows.select("url_hash"), channel="superstep", superstep=superstep
             )
@@ -595,30 +611,24 @@ class CrawlRun:
         # total, and the virtual-clock minimum — at 10^10 rows each extra
         # full-table action is a superstep-dominating cost, so the stats
         # that need the whole table share a single aggregation.
-        merged = self.frontier.read(spark).persist()
-        mrow = merged.agg(
+        mrow = self.frontier.read(spark).agg(
             F.count("*").alias("total"),
             F.sum((F.col("state") == "pending").cast("long")).alias("pending"),
             F.min(F.when(F.col("state") == "pending", F.col("next_date"))).alias("min_next"),
         ).collect()[0]
         seen_total = mrow["total"]
         pending_after = mrow["pending"] or 0
-        per_part = {
-            str(r["lineage_partition"]): r["cnt"]
-            for r in merged.groupBy("lineage_partition").agg(F.count("*").alias("cnt")).collect()
-        }
         next_time = self._advance_clock_from(mrow["min_next"], virtual_time)
         self.checkpoints.commit(
             spark, superstep, next_time, snapshot_id,
             {"urls_seen": seen_total, "fetched": fetched_count, "discovered": discovered},
-            per_part,
             frontier_snapshot=self.frontier.store.snapshot(),
             queue_state_snapshot=(
                 self.queue_state.store.snapshot()
                 if self.queue_state is not None else None
             ),
         )
-        for df in (frontier, batch, extracted, merged, new_rows):
+        for df in (frontier, batch, extracted, distinct_cands, new_rows):
             df.unpersist()
         if deferred is not None:
             deferred.unpersist()
@@ -772,6 +782,6 @@ def fetched_to_outcomes(extracted: DataFrame) -> DataFrame:
     return extracted.select(
         "url", "url_hash", "host", "registered_domain", "queue", "etag",
         "mod_date", "next_date", "priority", "error_count", "state",
-        "discovered_superstep", "lineage_partition",
+        "discovered_superstep",
         "status_code", "rep_etag", "rep_last_modified",
     )

@@ -10,6 +10,8 @@ from pyspark.sql import types as T
 
 # A1. frontier — superset of the reference queue row
 # (queue, url, etag, mod_date, next_date, priority) + lineage/state.
+# Frontier deltas written before lineage_partition was dropped still
+# carry it; FrontierTable drops it on read.
 FRONTIER_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -24,7 +26,6 @@ FRONTIER_SCHEMA = T.StructType(
         T.StructField("error_count", T.IntegerType(), False),  # T4
         T.StructField("state", T.StringType(), False),  # pending|fetched|error|gone
         T.StructField("discovered_superstep", T.IntegerType(), False),  # lineage
-        T.StructField("lineage_partition", T.IntegerType(), False),     # lineage
     ]
 )
 
@@ -87,7 +88,6 @@ CHECKPOINT_SCHEMA = T.StructType(
         T.StructField("urls_seen_count", T.LongType(), False),
         T.StructField("fetched_count", T.LongType(), False),
         T.StructField("discovered_count", T.LongType(), False),
-        T.StructField("per_partition_counts", T.MapType(T.StringType(), T.LongType()), False),
     ]
 )
 

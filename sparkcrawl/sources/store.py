@@ -35,11 +35,17 @@ from pyspark.sql import functions as F
 
 
 class ParquetManifestStore:
-    """Manifest-tracked append-only parquet table with atomic commits."""
+    """Manifest-tracked append-only parquet table with atomic commits.
 
-    def __init__(self, root: str, name: str):
+    ``legacy_columns`` names columns the table no longer writes: they are
+    dropped from every delta on read, so deltas written before the
+    column was removed still union with newer ones."""
+
+    def __init__(self, root: str, name: str,
+                 legacy_columns: tuple[str, ...] = ()):
         self.root = os.path.join(root, name)
         self.name = name
+        self.legacy_columns = legacy_columns
         os.makedirs(os.path.join(self.root, "data"), exist_ok=True)
         if not os.path.exists(self._manifest_path):
             self._write_manifest({"deltas": [], "meta": {}, "version": 0, "next_seq": 0})
@@ -136,7 +142,7 @@ class ParquetManifestStore:
         paths = [d["path"] for d in deltas]
         if not paths:
             return None
-        dfs = [spark.read.parquet(p) for p in paths]
+        dfs = [spark.read.parquet(p).drop(*self.legacy_columns) for p in paths]
         out = dfs[0]
         for df in dfs[1:]:
             out = out.unionByName(df)
@@ -144,7 +150,9 @@ class ParquetManifestStore:
 
     def replace_all(self, df: DataFrame, meta: dict | None = None,
                     partition_by: tuple[str, ...] = ()) -> str:
-        """Compaction commit: next snapshot = exactly this data."""
+        """Compaction commit: next snapshot = exactly this data. The
+        delta's manifest entry is marked ``compacted`` (see
+        :meth:`FrontierTable.read`)."""
         manifest = self._read_manifest()
         seq = manifest["next_seq"]
         manifest["next_seq"] = seq + 1
@@ -153,7 +161,7 @@ class ParquetManifestStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(delta_dir)
-        manifest["deltas"] = [{"path": delta_dir, "seq": seq}]
+        manifest["deltas"] = [{"path": delta_dir, "seq": seq, "compacted": True}]
         manifest["version"] += 1
         if meta:
             manifest["meta"].update(meta)
@@ -218,7 +226,11 @@ class FrontierTable:
     """
 
     def __init__(self, root: str):
-        self.store = ParquetManifestStore(root, "frontier")
+        # lineage_partition (spark_partition_id at discovery) was a
+        # placement-dependent value nothing read
+        self.store = ParquetManifestStore(
+            root, "frontier", legacy_columns=("lineage_partition",)
+        )
 
     def merge(self, updates: DataFrame, superstep: int,
               tag: str | None = None) -> str:
@@ -243,12 +255,18 @@ class FrontierTable:
         identical in every version of a row, so filtering each delta
         BEFORE the merge is safe and hits the hive partition dirs
         (PartitionFilters in the scan — verified in tests/test_store.py).
+
+        A snapshot that is exactly one delta written by :meth:`compact`
+        is already one row per url_hash, so it skips the window.
         """
-        raw = self.store.read_raw(spark, snapshot=snapshot)
+        deltas = snapshot if snapshot is not None else self.store.snapshot()
+        raw = self.store.read_raw(spark, snapshot=deltas)
         if raw is None:
             return None
         if queues is not None:
             raw = raw.filter(F.col("queue").isin(queues))
+        if len(deltas) == 1 and deltas[0].get("compacted"):
+            return raw.drop("_delta_seq")
         w = W.partitionBy("url_hash").orderBy(F.desc("_delta_seq"))
         return (
             raw.withColumn("_rn", F.row_number().over(w))
@@ -257,6 +275,9 @@ class FrontierTable:
         )
 
     def compact(self, spark: SparkSession) -> None:
+        """Rewrite the keep-latest view as one delta; the frontier's only
+        ``replace_all`` writer, so a lone compacted delta is unique per
+        url_hash."""
         current = self.read(spark)
         if current is not None:
             part = ("queue",) if "queue" in current.columns else ()
@@ -306,7 +327,9 @@ class CheckpointLog:
     last row (analog: frontier.checkpoint() committing the SQLite txn)."""
 
     def __init__(self, root: str):
-        self.store = ParquetManifestStore(root, "checkpoints")
+        self.store = ParquetManifestStore(
+            root, "checkpoints", legacy_columns=("per_partition_counts",)
+        )
 
     def commit(
         self,
@@ -315,7 +338,6 @@ class CheckpointLog:
         virtual_time: datetime,
         snapshot_id: str,
         counters: dict[str, int],
-        per_partition_counts: dict[str, int],
         frontier_snapshot: list[dict] | None = None,
         queue_state_snapshot: list[dict] | None = None,
     ) -> None:
@@ -329,7 +351,6 @@ class CheckpointLog:
                 counters.get("urls_seen", 0),
                 counters.get("fetched", 0),
                 counters.get("discovered", 0),
-                {str(k): int(v) for k, v in per_partition_counts.items()},
             )
         ]
         df = spark.createDataFrame(row, schema=CHECKPOINT_SCHEMA)

@@ -70,7 +70,7 @@ def stream_seeds_into_crawl(
             run.checkpoints.commit(
                 run.spark, 0, run.cfg.t0,
                 f"frontier-v{run.frontier.store.version}",
-                {"urls_seen": rows.count(), "fetched": 0, "discovered": 0}, {},
+                {"urls_seen": rows.count(), "fetched": 0, "discovered": 0},
             )
         run.resume(max_supersteps=supersteps_per_batch)
 

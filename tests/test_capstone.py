@@ -28,6 +28,7 @@ def test_crawl_then_curate_then_export(spark, mini_cfg, mini_web, tmp_path,
     separately in test_parity.py.)"""
     cfg = dataclasses.replace(
         mini_cfg,
+        use_bloom_prefilter=True,
         membership_kind=membership_kind,
         retire_gone_urls=(membership_kind == "cuckoo"),
     )

@@ -176,7 +176,8 @@ def test_engine_retires_gone_urls(spark, mini_cfg, mini_web, tmp_path):
     from sparkcrawl.plans.superstep import CrawlRun
 
     cfg = dataclasses.replace(
-        mini_cfg, membership_kind="cuckoo", retire_gone_urls=True
+        mini_cfg, use_bloom_prefilter=True, membership_kind="cuckoo",
+        retire_gone_urls=True,
     )
     run = CrawlRun(spark, str(tmp_path), cfg, mini_web["web"], mini_web["robots"])
     run.run(mini_web["seeds"], max_supersteps=4)

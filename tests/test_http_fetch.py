@@ -23,11 +23,11 @@ T0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
 def _batch(spark):
     rows = [
         ("http://a.example/fresh", "h1", "a.example", "a.example", 0, None, None,
-         T0, 1, 0, "pending", 0, 0),
+         T0, 1, 0, "pending", 0),
         ("http://a.example/conditional", "h2", "a.example", "a.example", 0, '"etag-1"',
-         T0, T0, 1, 0, "pending", 0, 0),
+         T0, T0, 1, 0, "pending", 0),
         ("http://a.example/down", "h3", "a.example", "a.example", 0, None, None,
-         T0, 1, 0, "pending", 0, 0),
+         T0, 1, 0, "pending", 0),
     ]
     return spark.createDataFrame(rows, FRONTIER_SCHEMA)
 

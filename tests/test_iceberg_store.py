@@ -24,7 +24,7 @@ def _rows(spark, specs):
         [
             (
                 f"http://h{i}.example/p", f"{i:040d}", f"h{i}.example",
-                f"h{i}.example", i % 4, None, None, T0, prio, 0, state, 0, 0,
+                f"h{i}.example", i % 4, None, None, T0, prio, 0, state, 0,
             )
             for i, state, prio in specs
         ],

@@ -58,11 +58,15 @@ def test_url_seen_set_matches_sequential_reference(engine, sim, spark):
     assert engine_seen == sim.seen_hashes
 
 
-def test_requeue_state_matches_sequential_reference(engine, sim, spark):
-    got = {
+def _requeue_state(engine, spark) -> dict:
+    return {
         r["url_hash"]: (r["priority"], r["state"], r["error_count"], r["next_date"].isoformat())
         for r in engine.frontier.read(spark).collect()
     }
+
+
+def test_requeue_state_matches_sequential_reference(engine, sim, spark):
+    got = _requeue_state(engine, spark)
     expected = {
         h: (r["priority"], r["state"], r["error_count"],
             r["next_date"].replace(tzinfo=None).isoformat())
@@ -132,7 +136,7 @@ def test_golden_requeue_math():
     rows = [
         (
             f"http://h.example/{i}", f"{i:040d}", "h.example", "h.example", 0,
-            None, None, t, p, e, "pending", 0, 0, s, None, None,
+            None, None, t, p, e, "pending", 0, s, None, None,
         )
         for i, (s, p, e) in enumerate(expectations)
     ]
@@ -162,13 +166,41 @@ def test_golden_requeue_math():
             assert (r["next_date"].replace(tzinfo=timezone.utc) - t).total_seconds() == delta, (status, p_in)
 
 
+# ---- bloom prefilter on: the anti-join stays the authority ----------------
+
+@pytest.fixture(scope="module")
+def engine_bloom(spark, mini_cfg, mini_web, tmp_path_factory):
+    import dataclasses
+
+    cfg = dataclasses.replace(mini_cfg, use_bloom_prefilter=True)
+    run = CrawlRun(
+        spark, str(tmp_path_factory.mktemp("parity-bloom")), cfg,
+        mini_web["web"], mini_web["robots"],
+    )
+    run.run(mini_web["seeds"], max_supersteps=N_SUPERSTEPS)
+    return run
+
+
+def test_bloom_prefilter_on_off_identical(engine, engine_bloom, sim, spark):
+    """The prefilter is opt-in and only routes rows around the
+    anti-join: crawl order, seen set and requeue state are identical
+    with it on and off (and both match the sequential reference)."""
+    assert engine_bloom.bloom_store.load() is not None  # the leg really ran it
+    assert engine.bloom_store.load() is None  # the default never builds one
+    assert _engine_fetch_order(engine_bloom, spark) \
+        == _engine_fetch_order(engine, spark) == sim.fetch_log
+    assert _requeue_state(engine_bloom, spark) == _requeue_state(engine, spark)
+
+
 # ---- cuckoo membership: pure prefilter swap, full parity ------------------
 
 @pytest.fixture(scope="module")
 def engine_cuckoo(spark, mini_cfg, mini_web, tmp_path_factory):
     import dataclasses
 
-    cfg = dataclasses.replace(mini_cfg, membership_kind="cuckoo")
+    cfg = dataclasses.replace(
+        mini_cfg, use_bloom_prefilter=True, membership_kind="cuckoo"
+    )
     run = CrawlRun(
         spark, str(tmp_path_factory.mktemp("parity-cuckoo")), cfg,
         mini_web["web"], mini_web["robots"],

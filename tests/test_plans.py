@@ -177,6 +177,57 @@ def test_frontier_rows_single_arrow_eval(spark):
     assert "BatchEvalPython" not in p, p
 
 
+# Spark jobs per superstep on mini_cfg with compact_every=1, measured
+# once discovered links stopped being re-canonicalized, the prefilter
+# went opt-in and the no-op actions were dropped (53 before those cuts).
+SUPERSTEP_JOB_BUDGET = 44
+
+
+def test_superstep_link_path_and_job_budget(spark, mini_cfg, mini_web,
+                                             tmp_path, monkeypatch):
+    """Discovered links are canonicalized once, in the extractor: the
+    rows merged as new frontier entries are a projection of the dedup
+    candidates, so their plan holds no canonicalize UDF and no other
+    Arrow-evaluated Python lane (the host column is pure JVM). And the job
+    count per superstep (statusTracker job groups) is flat once
+    compaction runs every superstep, at or under the recorded budget."""
+    import dataclasses
+
+    import sparkcrawl.plans.superstep as sup
+
+    built = []
+    real = sup.new_frontier_rows
+
+    def capture(*a, **kw):
+        built.append(real(*a, **kw))
+        return built[-1]
+
+    cfg = dataclasses.replace(mini_cfg, compact_every=1)
+    run = sup.CrawlRun(spark, str(tmp_path), cfg, mini_web["web"],
+                       mini_web["robots"])
+    run.bootstrap(mini_web["seeds"])  # seeds are raw: canonicalized here
+    monkeypatch.setattr(sup, "new_frontier_rows", capture)
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for i in range(1, 5):
+            sc.setJobGroup(f"test-superstep-{i}", "superstep job budget")
+            run.resume(max_supersteps=1)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(
+                f"test-superstep-{i}")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    assert len(built) == 4
+    for rows in built:
+        p = plan_of(rows, "extended")
+        assert "canonicalize_with_host" not in p, p
+        assert "ArrowEvalPython" not in p, p  # no Python lane on the link path
+    assert len(set(jobs[1:])) == 1, jobs  # supersteps 2-4
+    assert max(jobs[1:]) <= SUPERSTEP_JOB_BUDGET, jobs
+
+
 def test_minhash_signatures_single_pass(spark):
     """Signatures must be ONE hash aggregation over the shingle rows
     (wide per-perm min columns + stack), never a perms-x-shingles row

@@ -134,3 +134,48 @@ def test_vacuum_cadence_preserves_parity_and_resume(
     state_b, order_b = _final_state(run_b2, spark)
     assert order_a == order_b
     assert state_a == state_b
+
+
+def _rewrite_with_column(spark, store, name, col):
+    """Rewrite every committed delta of ``store`` in place with an extra
+    column — a workdir written before the engine stopped writing it."""
+    import os
+    import shutil
+
+    for d in store.snapshot():
+        df = spark.read.parquet(d["path"])
+        parts = ["queue"] if "queue" in df.columns else []
+        tmp = d["path"] + ".legacy"
+        df.withColumn(name, col).write.partitionBy(*parts).parquet(tmp)
+        shutil.rmtree(d["path"])
+        os.replace(tmp, d["path"])
+
+
+def test_resume_reads_legacy_lineage_columns(spark, mini_cfg, mini_web,
+                                             tmp_path_factory):
+    """Frontier deltas that still carry ``lineage_partition`` and
+    checkpoint rows that still carry ``per_partition_counts`` union with
+    the new deltas that lack them: the crawl resumes and matches the
+    sequential reference."""
+    from tests.reference_sim import SeqCrawler
+
+    work = str(tmp_path_factory.mktemp("legacy"))
+    run = CrawlRun(spark, work, mini_cfg, mini_web["web"], mini_web["robots"])
+    run.run(mini_web["seeds"], max_supersteps=2)
+    _rewrite_with_column(spark, run.frontier.store, "lineage_partition",
+                         F.spark_partition_id())
+    _rewrite_with_column(spark, run.checkpoints.store, "per_partition_counts",
+                         F.create_map(F.lit("0"), F.lit(1).cast("long")))
+    assert "lineage_partition" in spark.read.parquet(
+        run.frontier.store.snapshot()[0]["path"]).columns
+
+    run2 = CrawlRun(spark, work, mini_cfg, mini_web["web"], mini_web["robots"])
+    run2.resume(max_supersteps=2)
+    frontier = run2.frontier.read(spark)
+    assert "lineage_partition" not in frontier.columns
+    assert run2.checkpoints.read(spark).count() == 5
+    sim = SeqCrawler(mini_cfg, mini_web["web_pdf"], mini_web["robots_pdf"])
+    sim.run(mini_web["seeds_pdf"], max_supersteps=4)
+    _, order = _final_state(run2, spark)
+    assert order == sim.fetch_log
+    assert sorted(r["url_hash"] for r in frontier.collect()) == sim.seen_hashes

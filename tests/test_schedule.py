@@ -36,7 +36,6 @@ def _row(i, queue=0, host="h0", next_offset=0, priority=1, state="pending"):
         0,
         state,
         0,
-        0,
     )
 
 

@@ -31,6 +31,26 @@ def test_append_after_compact_wins(spark, tmp_path):
     assert got == {"a": 3, "b": 1}
 
 
+def test_frontier_read_skips_window_only_for_lone_compacted_delta(spark, tmp_path):
+    """A snapshot that is exactly one compact() delta is already one row
+    per url_hash, so the keep-latest window is skipped; any other single
+    delta (a first append may repeat a key) keeps it."""
+    def has_window(df):
+        return "Window" in df._jdf.queryExecution().executedPlan().toString()
+
+    ft = FrontierTable(str(tmp_path))
+    ft.store.append(_df(spark, [("a", 1), ("a", 2), ("b", 1)]))
+    assert ft.store.num_deltas == 1 and has_window(ft.read(spark))
+    ft.compact(spark)
+    pinned = ft.store.snapshot()
+    assert not has_window(ft.read(spark))
+    got = sorted((r["url_hash"], r["val"]) for r in ft.read(spark).collect())
+    assert [h for h, _ in got] == ["a", "b"]
+    ft.store.append(_df(spark, [("b", 3)]))
+    assert has_window(ft.read(spark))
+    assert not has_window(ft.read(spark, snapshot=pinned))  # as-of read
+
+
 def test_uncommitted_delta_invisible(spark, tmp_path):
     """Atomicity: a delta dir on disk that is not in the manifest (a
     killed superstep's orphan) is never read."""

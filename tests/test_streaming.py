@@ -184,7 +184,10 @@ def test_streamed_seed_priority_and_bloom(spark, mini_cfg, mini_web, tmp_path):
         pd.DataFrame({"url": [seed_url], "priority": [2]}), SEEDS_SCHEMA
     ).write.parquet(seeds_dir)
 
-    run = CrawlRun(spark, str(tmp_path / "work"), mini_cfg,
+    import dataclasses
+
+    cfg = dataclasses.replace(mini_cfg, use_bloom_prefilter=True)
+    run = CrawlRun(spark, str(tmp_path / "work"), cfg,
                    mini_web["web"], mini_web["robots"])
     run.bootstrap(mini_web["seeds"].limit(3))
     q = stream_seeds_into_crawl(

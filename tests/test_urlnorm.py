@@ -59,13 +59,42 @@ def test_fast_path_rejects_trailing_newline():
     assert got[0] == "http://h.example/a"  # newline stripped, same hash key
 
 
-@given(
-    st.from_regex(r"http://[a-z]{1,8}\.example(:[0-9]{2,4})?/[a-zA-Z0-9/_.-]{0,20}(\?[a-z]=[0-9]&?[a-z]?=?[0-9]?)?(#[a-z0-9]{0,5})?", fullmatch=True)
+# userinfo, bracketed IPv6 hosts, ports, and whitespace in front of a
+# query or fragment that canonicalization drops
+_IDEMPOTENT_URL_RE = (
+    r"(https?|HTTP)://([a-zA-Z]{1,3}(:[a-z0-9]{0,3})?@)?"
+    r"([a-zA-Z]{1,8}\.example|\[(::1|2001:[dD]b8::[0-9a-f]{1,4}|FE80::[0-9A-F]{1,2})\])"
+    r"(:[0-9]{0,5})?"
+    r"(/[a-zA-Z0-9/_.;=%-]{0,20})?[ \t]{0,2}"
+    r"(\?([a-z]{1,4}=[0-9 ]{0,2}&?|sid=[0-9]&?| )*)?"
+    r"(#[a-z0-9 ]{0,5})?[ ]{0,2}"
 )
-@settings(max_examples=200, deadline=None)
+
+
+@given(st.one_of(
+    # the earlier generator (bare keys, empty keys, doubled '=' in the
+    # query) plus the shapes above
+    st.from_regex(r"http://[a-z]{1,8}\.example(:[0-9]{2,4})?/[a-zA-Z0-9/_.-]{0,20}(\?[a-z]=[0-9]&?[a-z]?=?[0-9]?)?(#[a-z0-9]{0,5})?", fullmatch=True),
+    st.from_regex(_IDEMPOTENT_URL_RE, fullmatch=True),
+))
+@settings(max_examples=400, deadline=None)
 def test_canonicalize_idempotent(url):
+    """The superstep dedups on the hash of a link's canonical form and
+    stores that same form, so canonicalization must be a fixed point."""
     once = canonicalize_one(url)
     assert canonicalize_one(once) == once
+
+
+@pytest.mark.parametrize("url,expected", [
+    ("http://a.example/ #", "http://a.example/"),
+    ("http://a.example/p ?sid=1", "http://a.example/p"),
+    ("http://[2001:db8::1]:8080/a", "http://[2001:db8::1]:8080/a"),
+    ("http://[::1]", "http://[::1]/"),
+    ("http://u:p@[FE80::1]:80/x", "http://u:p@[fe80::1]/x"),
+])
+def test_canonicalize_fixed_point_cases(url, expected):
+    assert canonicalize_one(url) == expected
+    assert canonicalize_one(expected) == expected
 
 
 @given(
@@ -118,10 +147,11 @@ def test_spark_udf_matches_python(spark):
 
 
 # ---------------------------------------------------------------------------
-# JVM fast class (with_canonical_host / host_of_canonical_col): the Catalyst
-# expressions must reproduce canonicalize_one / urlsplit-hostname byte-for-
-# byte over BOTH fast-class and slow-class inputs (slow rows route through
-# the pandas UDF inside the same column, so the whole surface is one test).
+# JVM fast class (with_canonical_host) and host_of_canonical_col: the
+# Catalyst expressions must reproduce canonicalize_one / urlsplit-hostname
+# byte-for-byte over BOTH fast-class and slow-class inputs (slow rows of
+# with_canonical_host route through the pandas UDF inside the same column,
+# so the whole surface is one test).
 
 JVM_EDGE_URLS = [
     # fast class: identity / lowercase / session-strip / fragment-strip
@@ -206,33 +236,6 @@ def test_jvm_fast_path_matches_python(spark):
         )
 
 
-def test_host_of_canonical_col_matches_python(spark):
-    from urllib.parse import urlsplit
-
-    from pyspark.sql import functions as F
-
-    from sparkcrawl.functions.urlnorm import host_of_canonical_col
-
-    urls = [
-        "http://h.example/a", "https://h.example", "http://h.example:8080/x",
-        "http://user@h.example/x", "http://[::1]:80/x", "HTTP://H.Example/x",
-        "http://UPPER.Host/a",  # canonical-gate passes, host must lowercase
-        "http://h.example/p?q=1#f", "weird", "", None,
-    ]
-    df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)], ["i", "url"])
-    got = {
-        r["i"]: r["host"]
-        for r in df.withColumn("host", host_of_canonical_col(F.col("url"))).collect()
-    }
-    for i, u in enumerate(urls):
-        if u is None:
-            want = None
-        else:
-            h = urlsplit(u).hostname
-            want = h.lower() if h else ""
-        assert got[i] == want, "url=%r got=%r want=%r" % (u, got[i], want)
-
-
 def test_with_canonical_host_plan_shape(spark):
     """One ArrowEvalPython (the NULL-gated slow path), zero row-at-a-time
     BatchEvalPython: the fast class must stay inside codegen."""
@@ -242,3 +245,66 @@ def test_with_canonical_host_plan_shape(spark):
     plan = with_canonical_host(df)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1, plan
     assert "BatchEvalPython" not in plan, plan
+
+
+def _random_canonicalizer_inputs(n=300, seed=7):
+    """Raw links with userinfo, IPv6 literals, ports, queries, fragments
+    and stray whitespace — the shapes the extractor's canonicalizer
+    turns into the crawl's discovered links."""
+    import random
+
+    rng = random.Random(seed)
+    hosts = ["h.example", "UP.Example", "a-b.c0.example", "[::1]",
+             "[2001:DB8::7]", "[fe80::1:2]", "127.0.0.1", "x_y.example"]
+    out = []
+    for _ in range(n):
+        user = rng.choice(["", "u@", "u:p@", "U:@", "a%40b@"])
+        port = rng.choice(["", "", ":80", ":443", ":8080", ":1"])
+        path = rng.choice(["", "/", "/a", "/a b", "/a;x=1", "/p;jsessionid=9/q",
+                           "/%7Ex", "/a:b@c"])
+        query = rng.choice(["", "", "?a=1", "?sid=2", "?a=&b=2", "?q=x y"])
+        frag = rng.choice(["", "", "#f", "#"])
+        ws = rng.choice(["", "", " ", "\t"])
+        out.append(f"{rng.choice(['http', 'HTTPS'])}://{user}"
+                   f"{rng.choice(hosts)}{port}{path}{ws}{query}{frag}")
+    return out
+
+
+def test_host_of_canonical_col_matches_python(spark):
+    """The pure-JVM host column equals urlsplit's lowercased hostname on
+    raw URLs and on every canonical form canonicalize_one produces (the
+    discovered-link path), with no Python lane in the plan."""
+    from urllib.parse import urlsplit
+
+    from pyspark.sql import functions as F
+
+    from sparkcrawl.functions.urlnorm import host_of_canonical_col
+
+    raw = JVM_EDGE_URLS + _random_fast_class_urls() + _random_canonicalizer_inputs() + [
+        "https://h.example", "http://user@h.example/x", "HTTP://H.Example/x",
+        "http://UPPER.Host/a", "http://h.example/p?q=1#f", "weird",
+        "http://a@b@c.example:1/x", "//h.example/x", "1http://x.example/",
+        "mailto:u@h.example", "http:\t//h.example/", "\x01 http://h.example/",
+        "http://u@[FE80::1%25Eth0]:8/x", "http://h.example:8:9/", "h.example:80",
+        "http://[::1",  # urlsplit raises: no oracle, but no crash either
+    ]
+    canon = {c for u in raw if u is not None for c in [canonicalize_one(u)] if c}
+    urls = sorted(set(u for u in raw if u is not None) | canon) + [None]
+    df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)], ["i", "url"])
+    col = host_of_canonical_col(F.col("url"))
+    got = {r["i"]: r["host"] for r in df.withColumn("host", col).collect()}
+    checked = 0
+    for i, u in enumerate(urls):
+        if u is None:
+            assert got[i] is None
+            continue
+        try:
+            h = urlsplit(u).hostname
+        except ValueError:
+            continue
+        assert got[i] == (h.lower() if h else ""), "url=%r got=%r" % (u, got[i])
+        checked += 1
+    assert checked == len(urls) - 2
+    assert "[2001:db8::7]" in " ".join(canon)  # IPv6 literals kept bracketed
+    assert "ArrowEvalPython" not in \
+        df.select(col)._jdf.queryExecution().executedPlan().toString()
