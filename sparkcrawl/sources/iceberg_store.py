@@ -11,8 +11,9 @@ read / seen_keys / compact + a snapshot pointer), expressed natively:
     time-travel with ``VERSION AS OF`` — the same T5 replay isolation
     run_superstep gets from the delta-list snapshot,
   - the table is ``PARTITIONED BY (queue)`` so a scheduler activating a
-    queue subset prunes whole partitions, exactly like the
-    hive-partitioned deltas (SURVEY §1.4),
+    queue subset prunes whole partitions (SURVEY §1.4); the parquet
+    store's deltas are flat and push the same ``queues=`` filter into
+    each delta's scan instead,
   - ``compact`` delegates to the ``rewrite_data_files`` procedure.
 
 This sandbox ships no Iceberg runtime jars (SURVEY §0), so everything

@@ -17,7 +17,7 @@ Frontier reads resolve keep-latest-per-url_hash with a window over the
 delta sequence (W4) — the Parquet-fallback equivalent of Iceberg
 ``MERGE INTO``; :meth:`FrontierTable.compact` bounds read amplification.
 
-At 10^10 rows the same layout holds: deltas are partitioned parquet,
+At 10^10 rows the same layout holds: deltas are flat parquet,
 the keep-latest window shuffles on url_hash (uniform sha1 → no skew),
 and compaction is an ordinary Spark job. Swapping IcebergStore in
 changes only this module (FrontierStore abstraction, SURVEY §7 M7).
@@ -69,7 +69,6 @@ class ParquetManifestStore:
 
     # -- public API --------------------------------------------------------
     def append(self, df: DataFrame, meta: dict | None = None,
-               partition_by: tuple[str, ...] = (),
                replace_tag: str | None = None) -> str:
         """Write a delta dir and atomically commit it to the manifest.
         Returns the new snapshot version id.
@@ -80,17 +79,8 @@ class ParquetManifestStore:
         deltas by superstep so a kill between their append and the
         superstep's checkpoint does not duplicate rows when resume()
         replays the superstep (the frontier needs no tag — keep-latest
-        reads are already idempotent per url_hash)."""
-        if partition_by and df.isEmpty():
-            # a zero-row partitioned write emits no parquet files at all
-            # (unreadable dir); an empty delta contributes nothing — commit
-            # only the metadata.
-            manifest = self._read_manifest()
-            manifest["version"] += 1
-            if meta:
-                manifest["meta"].update(meta)
-            self._write_manifest(manifest)
-            return f"{self.name}-v{manifest['version']}"
+        reads are already idempotent per url_hash). A zero-row ``df``
+        still commits a readable delta holding only the schema."""
         manifest = self._read_manifest()
         # seq is manifest-monotonic (NOT len(deltas)): compaction shrinks the
         # delta list, and a reused lower seq would let keep-latest reads
@@ -98,10 +88,7 @@ class ParquetManifestStore:
         seq = manifest["next_seq"]
         manifest["next_seq"] = seq + 1
         delta_dir = os.path.join(self.root, "data", f"delta-{seq:06d}-{uuid.uuid4().hex[:8]}")
-        writer = df.withColumn("_delta_seq", F.lit(seq)).write.mode("errorifexists")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(delta_dir)
+        df.withColumn("_delta_seq", F.lit(seq)).write.mode("errorifexists").parquet(delta_dir)
         if replace_tag is not None:
             # drop superseded deltas and commit the replacement atomically;
             # the orphaned dirs are never referenced again (same guarantee
@@ -131,9 +118,10 @@ class ParquetManifestStore:
                  snapshot: list[dict] | None = None) -> DataFrame | None:
         """Union of all committed deltas (with ``_delta_seq``).
 
-        Each delta is read as its own table root (multi-root reads break
-        Spark's hive-partition discovery) and unioned by name — the
-        delta list is bounded by the compaction cadence. ``snapshot``
+        Each delta is read as its own table root and unioned by name, so
+        a delta written hive-partitioned (``queue=N/`` dirs, the frontier
+        layout of older workdirs) still unions with flat ones — the delta
+        list is bounded by the compaction cadence. ``snapshot``
         (from :meth:`snapshot`) time-travels the read to that exact
         delta list — T5: a replayed superstep must see the table as the
         last checkpoint saw it, not the killed attempt's half-state.
@@ -148,8 +136,7 @@ class ParquetManifestStore:
             out = out.unionByName(df)
         return out
 
-    def replace_all(self, df: DataFrame, meta: dict | None = None,
-                    partition_by: tuple[str, ...] = ()) -> str:
+    def replace_all(self, df: DataFrame, meta: dict | None = None) -> str:
         """Compaction commit: next snapshot = exactly this data. The
         delta's manifest entry is marked ``compacted`` (see
         :meth:`FrontierTable.read`)."""
@@ -157,10 +144,7 @@ class ParquetManifestStore:
         seq = manifest["next_seq"]
         manifest["next_seq"] = seq + 1
         delta_dir = os.path.join(self.root, "data", f"compact-{seq:06d}-{uuid.uuid4().hex[:8]}")
-        writer = df.withColumn("_delta_seq", F.lit(seq)).write.mode("errorifexists")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(delta_dir)
+        df.withColumn("_delta_seq", F.lit(seq)).write.mode("errorifexists").parquet(delta_dir)
         manifest["deltas"] = [{"path": delta_dir, "seq": seq, "compacted": True}]
         manifest["version"] += 1
         if meta:
@@ -219,10 +203,11 @@ class ParquetManifestStore:
 class FrontierTable:
     """The frontier with MERGE-INTO (keep-latest) read semantics (J3/W4).
 
-    Deltas are hive-partitioned by ``queue`` (SURVEY §1.4: frontier
-    bucketed by queue): at 10^10 rows a scheduler that only activates a
-    subset of queues prunes whole partitions at scan time, and per-queue
-    parquet min/max stats on next_date prune cold files.
+    Deltas and compactions are flat parquet: no engine read prunes by
+    queue, and a per-queue hive layout splits each delta into up to
+    tasks x queues tiny files, which on a 64-queue crawl cost more per
+    write and per read than the rows do. A ``queues=`` read is a data
+    filter pushed into each delta's parquet scan.
     """
 
     def __init__(self, root: str):
@@ -238,23 +223,22 @@ class FrontierTable:
         per url_hash at read time. ``tag`` makes the merge idempotent per
         superstep (a replayed superstep replaces its killed attempt's
         delta instead of shadowing it)."""
-        part = ("queue",) if "queue" in updates.columns else ()
         return self.store.append(
-            updates, meta={"superstep": superstep}, partition_by=part,
-            replace_tag=tag,
+            updates, meta={"superstep": superstep}, replace_tag=tag
         )
 
     def read(self, spark: SparkSession, queues: list[int] | None = None,
              snapshot: list[dict] | None = None) -> DataFrame | None:
-        """Keep-latest frontier view; ``queues`` prunes partitions.
+        """Keep-latest frontier view; ``queues`` keeps only those queues.
 
         Arbitrary predicates can NOT be pushed below the keep-latest
         window (an old delta's row may satisfy them while the newest
         does not — pre-filtering would resurrect stale state). ``queue``
         is the exception: it is a pure function of the URL's domain,
         identical in every version of a row, so filtering each delta
-        BEFORE the merge is safe and hits the hive partition dirs
-        (PartitionFilters in the scan — verified in tests/test_store.py).
+        BEFORE the merge is safe and reaches the parquet scan as a
+        pushed data filter (PushedFilters — verified in
+        tests/test_store.py).
 
         A snapshot that is exactly one delta written by :meth:`compact`
         is already one row per url_hash, so it skips the window.
@@ -280,8 +264,7 @@ class FrontierTable:
         url_hash."""
         current = self.read(spark)
         if current is not None:
-            part = ("queue",) if "queue" in current.columns else ()
-            self.store.replace_all(current, partition_by=part)
+            self.store.replace_all(current)
 
     def seen_keys(self, spark: SparkSession,
                   snapshot: list[dict] | None = None) -> DataFrame | None:

@@ -179,3 +179,55 @@ def test_resume_reads_legacy_lineage_columns(spark, mini_cfg, mini_web,
     _, order = _final_state(run2, spark)
     assert order == sim.fetch_log
     assert sorted(r["url_hash"] for r in frontier.collect()) == sim.seen_hashes
+
+
+def _queue_dirs(path):
+    import os
+
+    return [n for n in os.listdir(path) if n.startswith("queue=")]
+
+
+def test_resume_reads_legacy_queue_partitioned_delta(spark, mini_cfg, mini_web,
+                                                     tmp_path_factory):
+    """A frontier whose bootstrap delta was written hive-partitioned by
+    ``queue`` (the layout of older workdirs) unions with the flat deltas
+    merged on top: read, seen_keys, compact and resume give the same
+    keep-latest rows and crawl as an all-flat workdir."""
+    import os
+    import shutil
+
+    def rows(df):
+        cols = sorted(df.columns)
+        return sorted(str(tuple(r)) for r in df.select(*cols).collect())
+
+    run_flat = CrawlRun(spark, str(tmp_path_factory.mktemp("flat")), mini_cfg,
+                        mini_web["web"], mini_web["robots"])
+    run_flat.run(mini_web["seeds"], max_supersteps=1)
+
+    work = str(tmp_path_factory.mktemp("hive"))
+    run = CrawlRun(spark, work, mini_cfg, mini_web["web"], mini_web["robots"])
+    run.bootstrap(mini_web["seeds"])
+    (boot,) = run.frontier.store.snapshot()
+    tmp = boot["path"] + ".hive"
+    spark.read.parquet(boot["path"]).write.partitionBy("queue").parquet(tmp)
+    shutil.rmtree(boot["path"])
+    os.replace(tmp, boot["path"])
+    run.resume(max_supersteps=1)  # merges a flat delta on top
+
+    deltas = run.frontier.store.snapshot()
+    assert len(deltas) == 2
+    assert _queue_dirs(deltas[0]["path"]) and not _queue_dirs(deltas[1]["path"])
+    assert rows(run.frontier.read(spark)) == rows(run_flat.frontier.read(spark))
+    assert rows(run.frontier.seen_keys(spark)) == rows(
+        run_flat.frontier.seen_keys(spark))
+
+    run2 = CrawlRun(spark, work, mini_cfg, mini_web["web"], mini_web["robots"])
+    run2.frontier.compact(spark)
+    (compacted,) = run2.frontier.store.snapshot()
+    assert not _queue_dirs(compacted["path"])
+    assert rows(run2.frontier.read(spark)) == rows(run_flat.frontier.read(spark))
+
+    # superstep 2 reads the checkpoint's pinned snapshot: the hive delta
+    run2.resume(max_supersteps=1)
+    run_flat.resume(max_supersteps=1)
+    assert _final_state(run2, spark) == _final_state(run_flat, spark)

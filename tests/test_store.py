@@ -63,9 +63,10 @@ def test_uncommitted_delta_invisible(spark, tmp_path):
     assert {r["val"] for r in rows} == {1}
 
 
-def test_queue_pruned_read_hits_partition_dirs(spark, tmp_path):
-    """The queues= read must show PartitionFilters in the parquet scan
-    (hive layout by queue) and return the same rows as post-filtering."""
+def test_queue_read_pushes_filter_into_flat_scan(spark, tmp_path):
+    """Deltas and compactions are flat parquet: the queues= read reaches
+    the parquet scan as a pushed data filter (PushedFilters), returns the
+    same rows as post-filtering, and no queue= directory is ever written."""
     import contextlib
     import io
     import re
@@ -76,15 +77,22 @@ def test_queue_pruned_read_hits_partition_dirs(spark, tmp_path):
     ft.merge(df, superstep=1)
     ft.merge(df.filter("queue = 2").withColumn("val", _one(spark)), superstep=2)
 
-    pruned = ft.read(spark, queues=[2])
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.explain("formatted")
-    pf = re.findall(r"PartitionFilters: \[[^\]]*queue[^\]]*\]", buf.getvalue())
-    assert pf, "queue filter did not reach the partitioned scan"
+    def check(pruned):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            pruned.explain("formatted")
+        pf = re.findall(r"PushedFilters: \[[^\]]*queue[^\]]*\]", buf.getvalue())
+        # one pushed queue filter per delta scan, below the keep-latest merge
+        assert len(pf) == ft.store.num_deltas, buf.getvalue()
+        full = ft.read(spark).filter("queue = 2")
+        assert sorted(map(str, pruned.collect())) == sorted(map(str, full.collect()))
 
-    full = ft.read(spark).filter("queue = 2")
-    assert sorted(map(str, pruned.collect())) == sorted(map(str, full.collect()))
+    check(ft.read(spark, queues=[2]))
+    ft.compact(spark)
+    check(ft.read(spark, queues=[2]))
+    data = os.path.join(ft.store.root, "data")
+    assert not [d for d, _, _ in os.walk(data)
+                if os.path.basename(d).startswith("queue=")]
 
 
 def _one(spark):

@@ -96,6 +96,26 @@ def test_control_channel_stop_and_add_seeds(spark, mini_cfg, mini_web, tmp_path_
     assert len(row) == 1
 
 
+def test_all_seeds_rejected_crawl_ends_cleanly(spark, mini_cfg, mini_web,
+                                                tmp_path):
+    """Seeds that all fail canonicalization still commit an (empty)
+    bootstrap delta: the run makes one superstep with every counter at 0
+    and stops, instead of failing with an unbootstrapped frontier."""
+    from sparkcrawl.schemas import SEEDS_SCHEMA
+
+    seeds = spark.createDataFrame([("http://[::1", 1)], SEEDS_SCHEMA)
+    run = CrawlRun(spark, str(tmp_path), mini_cfg, mini_web["web"],
+                   mini_web["robots"])
+    stats = run.run(seeds, max_supersteps=3)
+    assert len(stats) == 1
+    st = stats[0]
+    assert st.superstep == 1
+    assert (st.batch_size, st.fetched, st.denied, st.discovered,
+            st.new_urls, st.pending_after, st.seen_total) == (0,) * 7
+    assert run.frontier.read(spark).count() == 0
+    assert run.last_checkpoint()["superstep"] == 1
+
+
 def test_determinism_same_seed_same_crawl(spark, mini_cfg, mini_web, tmp_path_factory):
     """Two fresh runs produce identical seen-sets and fetch counts."""
     runs = []
