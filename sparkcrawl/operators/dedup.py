@@ -58,7 +58,7 @@ def filter_unseen(
     with the ``prefilter(df, column)`` surface — ShardedBloom or the
     deletion-capable ShardedCuckoo (cfg.membership_kind).
     """
-    seen_keys = seen.select("url_hash").distinct()
+    seen_keys = seen.select("url_hash")  # an anti-join ignores repeated keys
     if bloom is None or not cfg.use_bloom_prefilter:
         return candidates.join(seen_keys, "url_hash", "left_anti")
     tagged = bloom.prefilter(candidates, "url_hash")

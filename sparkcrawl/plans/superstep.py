@@ -13,7 +13,7 @@ with a deterministic driver loop; one superstep =
   7 DEDUP       batch distinct -> [bloom prefilter] -> anti-join U2,F1,J1
   8 PRIORITIZE  requeue math + error backoff                     C8,T4
   9 MERGE       frontier' = requeued ∪ denied ∪ new              U1,J3
- 10 CHECKPOINT  snapshot + counters                              T5,A3
+ 10 CHECKPOINT  observed counters + manifest row (no Spark job)  T5,A3
  11 CLOCK       T' = max(T+tick, min pending next_date)          T1
 
 State lives only in tables; the driver touches counters and control
@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from sparkcrawl.config import CrawlConfig
 from sparkcrawl.functions.hashing import queue_for_domain, url_sha1
+from sparkcrawl.functions.observe import observe, observed_count
 from sparkcrawl.functions.scope import in_scope
 from sparkcrawl.functions.urlnorm import host_of_canonical_col, with_canonical_host
 from sparkcrawl.operators.dedup import batch_distinct, filter_unseen
@@ -58,6 +59,7 @@ from sparkcrawl.sources.store import (
     FrontierTable,
     LinkEdgesTable,
     QueueStateTable,
+    frontier_totals,
 )
 
 
@@ -222,16 +224,19 @@ class CrawlRun:
             t0=self.cfg.t0,
             priority_col=F.col("priority"),
         )
-        rows = batch_distinct(rows).persist()
+        rows = batch_distinct(rows)
         if self.cfg.use_bloom_prefilter:
             # bloom BEFORE merge: superset invariant (see run_superstep)
+            rows = rows.persist()
             self.bloom_store.update(
                 rows.select("url_hash"), channel="bootstrap", superstep=0
             )
-        self.frontier.merge(rows, superstep=0, tag="bootstrap")
+        merged, obs_seen = observe(rows)
+        self.frontier.merge(merged, superstep=0, tag="bootstrap")
         self.checkpoints.commit(
             self.spark, 0, self.cfg.t0, f"frontier-v{self.frontier.store.version}",
-            {"urls_seen": rows.count(), "fetched": 0, "discovered": 0},
+            {"urls_seen": observed_count(obs_seen, rows), "fetched": 0,
+             "discovered": 0},
             frontier_snapshot=self.frontier.store.snapshot(),
             queue_state_snapshot=(
                 self.queue_state.store.snapshot()
@@ -426,6 +431,8 @@ class CrawlRun:
             .join(batch.select("url_hash", "url"), "url_hash")
             .select("superstep", "rank", "slot", "url", "url_hash", "status_code", "outcome")
         )
+        # one log row per robots-allowed batch row: the fetched counter
+        log_df, obs_fetched = observe(log_df)
         self.fetch_log.append(log_df, superstep)
 
         # 6: discovered links, already canonical (extractor resolves + canonicalizes)
@@ -491,14 +498,20 @@ class CrawlRun:
 
         # 7: DEDUP — batch distinct, optional persisted bloom prefilter
         # (loaded, not rebuilt: O(new) per superstep, M4), authoritative
-        # anti-join. Both results are persisted: the merge, the bloom
-        # update and the checkpoint counters all read them.
-        distinct_cands = batch_distinct(candidates).persist()
-        seen = self.frontier.seen_keys(spark, snapshot=as_of)
+        # anti-join against the keys of the persisted start-of-superstep
+        # frontier (the as_of snapshot, one row per url_hash). The merge
+        # is the only reader of both results unless the prefilter is on
+        # (it reads the candidates twice and the new rows once more).
+        # The discovered counter sits on the anti-join's input, not on a
+        # written branch: it reports unless the candidates are empty and
+        # AQE drops the join, and is then counted with an action.
+        distinct_cands, obs_discovered = observe(batch_distinct(candidates))
+        seen = frontier.select("url_hash")
         bloom = None
         if cfg.use_bloom_prefilter:
+            distinct_cands = distinct_cands.persist()
             bloom = self.bloom_store.load()
-            if bloom is None and seen is not None:
+            if bloom is None:
                 # bloom blob lost but frontier has state: an incremental
                 # restart would violate the superset invariant (stale
                 # bloom re-admits seen URLs) — rebuild once from the
@@ -508,7 +521,9 @@ class CrawlRun:
             filter_unseen(distinct_cands, seen, cfg, bloom),
             superstep=superstep,
             t0=virtual_time + timedelta(seconds=cfg.tick_seconds),
-        ).persist()
+        )
+        if cfg.use_bloom_prefilter:
+            new_rows = new_rows.persist()
 
         # 8: PRIORITIZE requeues
         requeued = apply_outcomes(fetched_to_outcomes(extracted), virtual_time, cfg)
@@ -523,8 +538,11 @@ class CrawlRun:
             "url_hash",
         ).select(*[f.name for f in new_rows.schema.fields])
 
-        # 9: MERGE (U1 + J3)
-        updates = requeued.unionByName(denied_rows).unionByName(new_rows)
+        # 9: MERGE (U1 + J3); the denied and new counters are observed on
+        # their union branches of this write
+        denied_rows, obs_denied = observe(denied_rows)
+        new_branch, obs_new = observe(new_rows)
+        updates = requeued.unionByName(denied_rows).unionByName(new_branch)
         if deferred is not None:
             # robots-unknown hosts: requeue untouched for the NEXT tick —
             # their rules were fetched above, so the next superstep gates
@@ -585,8 +603,9 @@ class CrawlRun:
             self.queue_state.merge(
                 update_queue_state(elig_counts, taken, carry_in, cfg), superstep
             )
+        totals = None
         if cfg.compact_every and superstep % cfg.compact_every == 0:
-            self.frontier.compact(spark)
+            totals = self.frontier.compact(spark)
         if cfg.vacuum_every and superstep % cfg.vacuum_every == 0:
             # storage maintenance AFTER compaction, BEFORE this superstep's
             # checkpoint: the previous checkpoint's pinned snapshot survives
@@ -596,29 +615,22 @@ class CrawlRun:
 
             vacuum_workdir(self.workdir)
 
-        # 10: CHECKPOINT + counters (A3)
-        # one agg pass over the (cached, config-bounded) batch ...
-        brow = batch.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("robots_allowed").cast("int")).alias("ok"),
-        ).collect()[0]
-        batch_size = brow["n"]
-        fetched_count = brow["ok"] or 0
-        denied_count = batch_size - fetched_count
-        discovered = distinct_cands.count()
-        new_count = new_rows.count()
-        # ... and ONE scan of the merged frontier for pending count, seen
-        # total, and the virtual-clock minimum — at 10^10 rows each extra
-        # full-table action is a superstep-dominating cost, so the stats
-        # that need the whole table share a single aggregation.
-        mrow = self.frontier.read(spark).agg(
-            F.count("*").alias("total"),
-            F.sum((F.col("state") == "pending").cast("long")).alias("pending"),
-            F.min(F.when(F.col("state") == "pending", F.col("next_date"))).alias("min_next"),
-        ).collect()[0]
-        seen_total = mrow["total"]
-        pending_after = mrow["pending"] or 0
-        next_time = self._advance_clock_from(mrow["min_next"], virtual_time)
+        # 10: CHECKPOINT + counters (A3), all observed on the writes above
+        # (functions/observe.py); an observation that did not report is
+        # counted with an action instead.
+        fetched_count = observed_count(obs_fetched, allowed)
+        denied_count = observed_count(obs_denied, denied)
+        discovered = observed_count(obs_discovered, distinct_cands)
+        new_count = observed_count(obs_new, new_rows)
+        if totals is None:
+            # no compaction this superstep: ONE scan of the merged frontier
+            # for seen total, pending count and the virtual-clock minimum —
+            # at 10^10 rows each extra full-table action is a
+            # superstep-dominating cost, so they share a single aggregation
+            totals = self.frontier.read(spark).agg(*frontier_totals()).collect()[0]
+        seen_total = totals["total"]
+        pending_after = totals["pending"] or 0
+        next_time = self._advance_clock_from(totals["min_next"], virtual_time)
         self.checkpoints.commit(
             spark, superstep, next_time, snapshot_id,
             {"urls_seen": seen_total, "fetched": fetched_count, "discovered": discovered},
@@ -633,8 +645,9 @@ class CrawlRun:
         if deferred is not None:
             deferred.unpersist()
         return SuperstepStats(
-            superstep, virtual_time, batch_size, fetched_count, denied_count,
-            discovered, new_count, pending_after, seen_total,
+            superstep, virtual_time, fetched_count + denied_count,
+            fetched_count, denied_count, discovered, new_count, pending_after,
+            seen_total,
         )
 
     # -- T1: virtual clock ---------------------------------------------------

@@ -137,9 +137,11 @@ class IcebergFrontierTable:
     def seen_keys(self, spark: SparkSession,
                   snapshot: list[dict] | None = None) -> DataFrame | None:
         df = self.read(spark, snapshot=snapshot)
-        return None if df is None else df.select("url_hash").distinct()
+        return None if df is None else df.select("url_hash")
 
     def compact(self, spark: SparkSession) -> None:
+        """Native file rewrite; it observes no totals, so the superstep
+        aggregates them from a read (FrontierTable.compact returns them)."""
         cat, _, rest = self.ident.partition(".")
         spark.sql(
             f"CALL {cat}.system.rewrite_data_files(table => '{rest}')"

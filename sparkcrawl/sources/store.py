@@ -9,6 +9,7 @@ for resumability:
 
   - every table is an append-only list of parquet *delta* dirs,
   - a ``manifest.json`` names the current snapshot = exact delta list,
+    with each delta's schema, so a read infers nothing (no Spark job),
   - commits are write-temp-then-``os.replace`` (atomic on POSIX),
   - a killed run resumes from the last committed manifest; orphan
     delta dirs from the killed superstep are simply never referenced.
@@ -30,16 +31,22 @@ import os
 import uuid
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from sparkcrawl.functions.observe import observe, observed
 
 
 class ParquetManifestStore:
     """Manifest-tracked append-only parquet table with atomic commits.
 
-    ``legacy_columns`` names columns the table no longer writes: they are
-    dropped from every delta on read, so deltas written before the
-    column was removed still union with newer ones."""
+    Each manifest entry records the schema its delta was written with;
+    entries written before schemas were recorded are read with parquet
+    schema inference (one Spark job each). ``legacy_columns`` names
+    columns the table no longer writes: they are dropped from every
+    delta on read, so deltas written before the column was removed
+    still union with newer ones."""
 
     def __init__(self, root: str, name: str,
                  legacy_columns: tuple[str, ...] = ()):
@@ -82,13 +89,7 @@ class ParquetManifestStore:
         reads are already idempotent per url_hash). A zero-row ``df``
         still commits a readable delta holding only the schema."""
         manifest = self._read_manifest()
-        # seq is manifest-monotonic (NOT len(deltas)): compaction shrinks the
-        # delta list, and a reused lower seq would let keep-latest reads
-        # resurrect compacted rows over newer appends.
-        seq = manifest["next_seq"]
-        manifest["next_seq"] = seq + 1
-        delta_dir = os.path.join(self.root, "data", f"delta-{seq:06d}-{uuid.uuid4().hex[:8]}")
-        df.withColumn("_delta_seq", F.lit(seq)).write.mode("errorifexists").parquet(delta_dir)
+        entry = self._write_delta(manifest, df, "delta")
         if replace_tag is not None:
             # drop superseded deltas and commit the replacement atomically;
             # the orphaned dirs are never referenced again (same guarantee
@@ -96,15 +97,44 @@ class ParquetManifestStore:
             manifest["deltas"] = [
                 d for d in manifest["deltas"] if d.get("tag") != replace_tag
             ]
-        entry = {"path": delta_dir, "seq": seq}
-        if replace_tag is not None:
             entry["tag"] = replace_tag
         manifest["deltas"].append(entry)
+        return self._commit(manifest, meta)
+
+    def _write_delta(self, manifest: dict, df: DataFrame, prefix: str) -> dict:
+        """Write ``df`` as the next delta dir; its manifest entry (path,
+        seq, written schema)."""
+        # seq is manifest-monotonic (NOT len(deltas)): compaction shrinks the
+        # delta list, and a reused lower seq would let keep-latest reads
+        # resurrect compacted rows over newer appends.
+        seq = manifest["next_seq"]
+        manifest["next_seq"] = seq + 1
+        delta_dir = os.path.join(
+            self.root, "data", f"{prefix}-{seq:06d}-{uuid.uuid4().hex[:8]}"
+        )
+        out = df.withColumn("_delta_seq", F.lit(seq))
+        out.write.mode("errorifexists").parquet(delta_dir)
+        return {"path": delta_dir, "seq": seq, "schema": out.schema.json()}
+
+    def _commit(self, manifest: dict, meta: dict | None) -> str:
         manifest["version"] += 1
         if meta:
             manifest["meta"].update(meta)
         self._write_manifest(manifest)
         return f"{self.name}-v{manifest['version']}"
+
+    def commit_rows(self, rows: list[dict], meta: dict | None = None) -> str:
+        """Append JSON-scalar ``rows`` to the manifest itself, with
+        ``meta``, in one atomic commit: for tables of a few Python scalars
+        per commit, where a parquet delta would cost a Spark job
+        to write and another to read back."""
+        manifest = self._read_manifest()
+        manifest.setdefault("rows", []).extend(rows)
+        return self._commit(manifest, meta)
+
+    def rows(self) -> list[dict]:
+        """The rows committed by :meth:`commit_rows`, in commit order."""
+        return self._read_manifest().get("rows", [])
 
     def snapshot(self) -> list[dict]:
         """The current committed delta list — a durable snapshot pointer
@@ -118,8 +148,9 @@ class ParquetManifestStore:
                  snapshot: list[dict] | None = None) -> DataFrame | None:
         """Union of all committed deltas (with ``_delta_seq``).
 
-        Each delta is read as its own table root and unioned by name, so
-        a delta written hive-partitioned (``queue=N/`` dirs, the frontier
+        Each delta is read as its own table root, with the schema its
+        manifest entry recorded, and unioned by name, so a delta written
+        hive-partitioned (``queue=N/`` dirs, the frontier
         layout of older workdirs) still unions with flat ones — the delta
         list is bounded by the compaction cadence. ``snapshot``
         (from :meth:`snapshot`) time-travels the read to that exact
@@ -127,10 +158,14 @@ class ParquetManifestStore:
         last checkpoint saw it, not the killed attempt's half-state.
         """
         deltas = snapshot if snapshot is not None else self._read_manifest()["deltas"]
-        paths = [d["path"] for d in deltas]
-        if not paths:
+        if not deltas:
             return None
-        dfs = [spark.read.parquet(p).drop(*self.legacy_columns) for p in paths]
+        dfs = [
+            (spark.read.schema(StructType.fromJson(json.loads(d["schema"])))
+             if "schema" in d else spark.read)
+            .parquet(d["path"]).drop(*self.legacy_columns)
+            for d in deltas
+        ]
         out = dfs[0]
         for df in dfs[1:]:
             out = out.unionByName(df)
@@ -141,16 +176,9 @@ class ParquetManifestStore:
         delta's manifest entry is marked ``compacted`` (see
         :meth:`FrontierTable.read`)."""
         manifest = self._read_manifest()
-        seq = manifest["next_seq"]
-        manifest["next_seq"] = seq + 1
-        delta_dir = os.path.join(self.root, "data", f"compact-{seq:06d}-{uuid.uuid4().hex[:8]}")
-        df.withColumn("_delta_seq", F.lit(seq)).write.mode("errorifexists").parquet(delta_dir)
-        manifest["deltas"] = [{"path": delta_dir, "seq": seq, "compacted": True}]
-        manifest["version"] += 1
-        if meta:
-            manifest["meta"].update(meta)
-        self._write_manifest(manifest)
-        return f"{self.name}-v{manifest['version']}"
+        entry = self._write_delta(manifest, df, "compact")
+        manifest["deltas"] = [{**entry, "compacted": True}]
+        return self._commit(manifest, meta)
 
     def vacuum(self, keep_paths: frozenset[str] | set[str] = frozenset(),
                min_age_s: float = 0.0) -> list[str]:
@@ -258,22 +286,43 @@ class FrontierTable:
             .drop("_rn", "_delta_seq")
         )
 
-    def compact(self, spark: SparkSession) -> None:
+    def compact(self, spark: SparkSession) -> dict | None:
         """Rewrite the keep-latest view as one delta; the frontier's only
         ``replace_all`` writer, so a lone compacted delta is unique per
-        url_hash."""
+        url_hash. Returns the :func:`frontier_totals` of the rewritten
+        view, observed on the rewrite itself (None when there is nothing
+        to compact, the rows lack frontier columns, or the observation
+        did not report)."""
         current = self.read(spark)
-        if current is not None:
-            self.store.replace_all(current)
+        if current is None:
+            return None
+        obs = None
+        if {"state", "next_date"} <= set(current.columns):
+            current, obs = observe(current, *frontier_totals())
+        self.store.replace_all(current)
+        return None if obs is None else observed(obs)
 
     def seen_keys(self, spark: SparkSession,
                   snapshot: list[dict] | None = None) -> DataFrame | None:
         """The URL-seen set IS the frontier key set (reference: every URL
-        entering the frontier was added to UniqueUriFilter)."""
+        entering the frontier was added to UniqueUriFilter). Keys may
+        repeat across deltas: an anti-join against them ignores that."""
         raw = self.store.read_raw(spark, snapshot=snapshot)
         if raw is None:
             return None
-        return raw.select("url_hash").distinct()
+        return raw.select("url_hash")
+
+
+def frontier_totals() -> list[Column]:
+    """The CHECKPOINT aggregates over a keep-latest frontier view: seen
+    total, pending count, and the earliest pending next_date (the
+    virtual clock's candidate)."""
+    pending = F.col("state") == "pending"
+    return [
+        F.count(F.lit(1)).alias("total"),
+        F.sum(pending.cast("long")).alias("pending"),
+        F.min(F.when(pending, F.col("next_date"))).alias("min_next"),
+    ]
 
 
 class QueueStateTable:
@@ -307,7 +356,13 @@ class QueueStateTable:
 
 class CheckpointLog:
     """T5 checkpoints: one committed row per superstep; resume reads the
-    last row (analog: frontier.checkpoint() committing the SQLite txn)."""
+    last row (analog: frontier.checkpoint() committing the SQLite txn).
+
+    A row is six Python scalars, so it is committed into the manifest
+    JSON itself (:meth:`ParquetManifestStore.commit_rows`) in the same
+    atomic replace as the resume pointers: a checkpoint launches no
+    Spark job. Workdirs written before that hold parquet checkpoint
+    deltas; :meth:`read` unions them with the manifest rows."""
 
     def __init__(self, root: str):
         self.store = ParquetManifestStore(
@@ -324,19 +379,14 @@ class CheckpointLog:
         frontier_snapshot: list[dict] | None = None,
         queue_state_snapshot: list[dict] | None = None,
     ) -> None:
-        from sparkcrawl.schemas import CHECKPOINT_SCHEMA
-
-        row = [
-            (
-                superstep,
-                virtual_time,
-                snapshot_id,
-                counters.get("urls_seen", 0),
-                counters.get("fetched", 0),
-                counters.get("discovered", 0),
-            )
-        ]
-        df = spark.createDataFrame(row, schema=CHECKPOINT_SCHEMA)
+        row = {
+            "superstep": superstep,
+            "virtual_time": virtual_time.isoformat(),
+            "snapshot_id": snapshot_id,
+            "urls_seen_count": counters.get("urls_seen", 0),
+            "fetched_count": counters.get("fetched", 0),
+            "discovered_count": counters.get("discovered", 0),
+        }
         meta = {
             "last_superstep": superstep,
             "last_virtual_time": virtual_time.isoformat(),
@@ -348,7 +398,7 @@ class CheckpointLog:
             meta["last_frontier_snapshot"] = frontier_snapshot
         if queue_state_snapshot is not None:
             meta["last_queue_state_snapshot"] = queue_state_snapshot
-        self.store.append(df, meta=meta)
+        self.store.commit_rows([row], meta=meta)
 
     def last(self) -> dict | None:
         meta = self.store.meta
@@ -363,8 +413,22 @@ class CheckpointLog:
         }
 
     def read(self, spark: SparkSession) -> DataFrame | None:
+        """CHECKPOINT_SCHEMA rows: older parquet deltas, then the
+        manifest rows, built into a DataFrame only when asked."""
+        from sparkcrawl.schemas import CHECKPOINT_SCHEMA
+
         raw = self.store.read_raw(spark)
-        return None if raw is None else raw.drop("_delta_seq")
+        if raw is not None:
+            raw = raw.drop("_delta_seq")
+        rows = [
+            tuple(datetime.fromisoformat(r[f.name]) if f.name == "virtual_time"
+                  else r[f.name] for f in CHECKPOINT_SCHEMA.fields)
+            for r in self.store.rows()
+        ]
+        if not rows:
+            return raw
+        df = spark.createDataFrame(rows, schema=CHECKPOINT_SCHEMA)
+        return df if raw is None else raw.unionByName(df)
 
 
 class FetchLogTable:

@@ -18,7 +18,7 @@ is written independently, sequentially, with dicts and sorts.
 from __future__ import annotations
 
 import hashlib
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 from urllib.parse import urlsplit
 
 from sparkcrawl.config import CrawlConfig
@@ -32,6 +32,21 @@ def _sha1(url: str) -> str:
 
 def _queue(domain: str, nq: int) -> int:
     return int(hashlib.md5(domain.encode("utf-8")).hexdigest()[:8], 16) % nq
+
+
+def _naive(t: datetime) -> datetime:
+    return t.astimezone(timezone.utc).replace(tzinfo=None) if t.tzinfo else t
+
+
+def engine_stats(stats) -> list[tuple]:
+    """The engine's SuperstepStats list as comparable tuples."""
+    import dataclasses
+
+    return [
+        tuple(_naive(v) if isinstance(v, datetime) else v
+              for v in dataclasses.astuple(st))
+        for st in stats
+    ]
 
 
 def _host(url: str) -> str:
@@ -51,6 +66,9 @@ class SeqCrawler:
         self.fetch_log: list[tuple[int, int, str]] = []  # (superstep, slot_rank, url)
         # same rows with the fetch status (for the outcome-column oracle)
         self.fetch_log_full: list[tuple[int, int, str, int | None]] = []
+        # one record per superstep, shaped like the engine's SuperstepStats
+        # (see superstep_stats) plus the next superstep's virtual time
+        self.stats: list[dict] = []
 
     # -- robots (longest prefix, allow wins ties, default allow) -----------
     def allowed(self, url: str) -> bool:
@@ -78,12 +96,14 @@ class SeqCrawler:
         return max(ds) if ds else self.cfg.crawl_delay_default
 
     # -- frontier ops --------------------------------------------------------
-    def add_url(self, url: str, superstep: int, next_date: datetime, priority: int = 1):
+    def add_url(self, url: str, superstep: int, next_date: datetime,
+                priority: int = 1) -> bool:
+        """True when the URL was new (added to the frontier)."""
         if url is None:  # unparseable seed/link (canonicalize_one -> None)
-            return
+            return False
         h = _sha1(url)
         if h in self.frontier:  # is_known(add_if_unknown=True)
-            return
+            return False
         host = _host(url)
         self.frontier[h] = dict(
             url=url, url_hash=h, host=host,
@@ -91,6 +111,7 @@ class SeqCrawler:
             etag=None, mod_date=None, next_date=next_date,
             priority=priority, error_count=0, state="pending",
         )
+        return True
 
     def seed(self, seeds_pdf):
         for r in seeds_pdf.itertuples():
@@ -135,9 +156,22 @@ class SeqCrawler:
             status = self._fetch_one(row, t, discovered)
             self.fetch_log_full.append((s, rank, row["url"], status))
         # dedup sequential, first-discovery-wins, then add
-        for url in discovered:
+        new_urls = sum(
             self.add_url(url, s, t + timedelta(seconds=cfg.tick_seconds))
-        return {"batch": len(ordered), "fetched": fetched}
+            for url in discovered
+        )
+        pending = [r["next_date"] for r in self.frontier.values()
+                   if r["state"] == "pending"]
+        floor = t + timedelta(seconds=cfg.tick_seconds)
+        stats = {
+            "superstep": s, "virtual_time": t, "batch_size": len(ordered),
+            "fetched": fetched, "denied": len(ordered) - fetched,
+            "discovered": len(set(discovered)), "new_urls": new_urls,
+            "pending_after": len(pending), "seen_total": len(self.frontier),
+            "next_time": max(floor, min(pending)) if pending else floor,
+        }
+        self.stats.append(stats)
+        return stats
 
     def _fetch_one(self, row: dict, t: datetime, discovered: list[str]) -> int | None:
         cfg = self.cfg
@@ -181,16 +215,31 @@ class SeqCrawler:
         return status
 
     # -- full run ----------------------------------------------------------------
-    def run(self, seeds_pdf, max_supersteps: int) -> None:
+    def run(self, seeds_pdf, max_supersteps: int,
+            add_seeds: dict[int, list[tuple[str, int]]] | None = None) -> None:
+        """``add_seeds`` maps a superstep to the (url, priority) seeds
+        injected just before it runs — the engine's control.json."""
         self.seed(seeds_pdf)
         t = self.cfg.t0
         for s in range(1, max_supersteps + 1):
+            for url, priority in (add_seeds or {}).get(s, []):
+                self.add_url(canonicalize_one(url), s, self.cfg.t0, priority)
             stats = self.superstep(s, t)
-            pending = [r["next_date"] for r in self.frontier.values() if r["state"] == "pending"]
-            floor = t + timedelta(seconds=self.cfg.tick_seconds)
-            t = max(floor, min(pending)) if pending else floor
-            if stats["batch"] == 0 and not pending:
+            t = stats["next_time"]
+            if stats["batch_size"] == 0 and not stats["pending_after"]:
                 break
+
+    @property
+    def superstep_stats(self) -> list[tuple]:
+        """The records as ``dataclasses.astuple(SuperstepStats)`` tuples
+        with naive UTC times — compare with :func:`engine_stats`."""
+        fields = ("superstep", "virtual_time", "batch_size", "fetched",
+                  "denied", "discovered", "new_urls", "pending_after",
+                  "seen_total")
+        return [
+            tuple(_naive(st[f]) if f == "virtual_time" else st[f] for f in fields)
+            for st in self.stats
+        ]
 
     @property
     def seen_hashes(self) -> list[str]:

@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkcrawl.plans.superstep import CrawlRun
-from tests.reference_sim import SeqCrawler
+from tests.reference_sim import SeqCrawler, engine_stats
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "..", "golden")
 N_SUPERSTEPS = 4
@@ -35,7 +35,7 @@ def engine(spark, mini_cfg, mini_web, tmp_path_factory):
         spark, str(tmp_path_factory.mktemp("parity")), mini_cfg,
         mini_web["web"], mini_web["robots"],
     )
-    run.run(mini_web["seeds"], max_supersteps=N_SUPERSTEPS)
+    run.stats = run.run(mini_web["seeds"], max_supersteps=N_SUPERSTEPS)
     return run
 
 
@@ -63,6 +63,28 @@ def _requeue_state(engine, spark) -> dict:
         r["url_hash"]: (r["priority"], r["state"], r["error_count"], r["next_date"].isoformat())
         for r in engine.frontier.read(spark).collect()
     }
+
+
+def test_superstep_counters_match_sequential_reference(engine, sim, spark):
+    """Every SuperstepStats field (batch, fetched, denied, discovered,
+    new, pending, seen, virtual time) equals the sequential reference's
+    record — superstep 3 compacts, so its totals are observed on the
+    rewrite, the others aggregate a read — and so does every checkpoint
+    row, bootstrap included."""
+    assert engine_stats(engine.stats) == sim.superstep_stats
+    ckpt = [
+        (r["superstep"], r["virtual_time"], r["urls_seen_count"],
+         r["fetched_count"], r["discovered_count"])
+        for r in engine.checkpoints.read(spark).orderBy("superstep").collect()
+    ]
+    first = sim.stats[0]
+    boot = (0, sim.cfg.t0.replace(tzinfo=None),
+            first["seen_total"] - first["new_urls"], 0, 0)
+    assert ckpt == [boot] + [
+        (st["superstep"], st["next_time"].replace(tzinfo=None),
+         st["seen_total"], st["fetched"], st["discovered"])
+        for st in sim.stats
+    ]
 
 
 def test_requeue_state_matches_sequential_reference(engine, sim, spark):
@@ -177,7 +199,7 @@ def engine_bloom(spark, mini_cfg, mini_web, tmp_path_factory):
         spark, str(tmp_path_factory.mktemp("parity-bloom")), cfg,
         mini_web["web"], mini_web["robots"],
     )
-    run.run(mini_web["seeds"], max_supersteps=N_SUPERSTEPS)
+    run.stats = run.run(mini_web["seeds"], max_supersteps=N_SUPERSTEPS)
     return run
 
 
@@ -189,6 +211,7 @@ def test_bloom_prefilter_on_off_identical(engine, engine_bloom, sim, spark):
     assert engine.bloom_store.load() is None  # the default never builds one
     assert _engine_fetch_order(engine_bloom, spark) \
         == _engine_fetch_order(engine, spark) == sim.fetch_log
+    assert engine_stats(engine_bloom.stats) == sim.superstep_stats
     assert _requeue_state(engine_bloom, spark) == _requeue_state(engine, spark)
 
 

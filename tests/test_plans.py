@@ -180,9 +180,30 @@ def test_frontier_rows_single_arrow_eval(spark):
 # Spark jobs per superstep on mini_cfg with compact_every=1, measured
 # once discovered links stopped being re-canonicalized, the prefilter
 # went opt-in and the no-op actions were dropped (53 before those cuts),
-# then once frontier deltas were written flat (44 with the per-queue
-# hive layout and its empty-delta check).
-SUPERSTEP_JOB_BUDGET = 42
+# once frontier deltas were written flat (44 with the per-queue hive
+# layout and its empty-delta check), then once CHECKPOINT took its
+# counters from observations, committed its row into the manifest and
+# deltas were read with their recorded schemas (42 before).
+SUPERSTEP_JOB_BUDGET = 25
+
+
+def _jobs_per_superstep(spark, run, n):
+    """Run ``n`` supersteps one at a time; their SuperstepStats and the
+    Spark jobs each launched (statusTracker job groups)."""
+    import uuid
+
+    sc = spark.sparkContext
+    stats, jobs = [], []
+    try:
+        for _ in range(n):
+            group = f"test-superstep-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, "superstep job count")
+            stats += run.resume(max_supersteps=1)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return stats, jobs
 
 
 def test_superstep_link_path_and_job_budget(spark, mini_cfg, mini_web,
@@ -192,10 +213,13 @@ def test_superstep_link_path_and_job_budget(spark, mini_cfg, mini_web,
     candidates, so their plan holds no canonicalize UDF and no other
     Arrow-evaluated Python lane (the host column is pure JVM). And the job
     count per superstep (statusTracker job groups) is flat once
-    compaction runs every superstep, at or under the recorded budget."""
+    compaction runs every superstep, at or under the recorded budget,
+    with every SuperstepStats field equal to the sequential reference's
+    (each superstep's totals observed on its compaction)."""
     import dataclasses
 
     import sparkcrawl.plans.superstep as sup
+    from tests.reference_sim import SeqCrawler, engine_stats
 
     built = []
     real = sup.new_frontier_rows
@@ -209,17 +233,7 @@ def test_superstep_link_path_and_job_budget(spark, mini_cfg, mini_web,
                        mini_web["robots"])
     run.bootstrap(mini_web["seeds"])  # seeds are raw: canonicalized here
     monkeypatch.setattr(sup, "new_frontier_rows", capture)
-    sc = spark.sparkContext
-    jobs = []
-    try:
-        for i in range(1, 5):
-            sc.setJobGroup(f"test-superstep-{i}", "superstep job budget")
-            run.resume(max_supersteps=1)
-            jobs.append(len(sc.statusTracker().getJobIdsForGroup(
-                f"test-superstep-{i}")))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    stats, jobs = _jobs_per_superstep(spark, run, 4)
 
     assert len(built) == 4
     for rows in built:
@@ -228,6 +242,61 @@ def test_superstep_link_path_and_job_budget(spark, mini_cfg, mini_web,
         assert "ArrowEvalPython" not in p, p  # no Python lane on the link path
     assert len(set(jobs[1:])) == 1, jobs  # supersteps 2-4
     assert max(jobs[1:]) <= SUPERSTEP_JOB_BUDGET, jobs
+    sim = SeqCrawler(cfg, mini_web["web_pdf"], mini_web["robots_pdf"])
+    sim.run(mini_web["seeds_pdf"], max_supersteps=4)
+    assert engine_stats(stats) == sim.superstep_stats
+
+
+# SuperstepStats of the crawl below as recorded from the engine version
+# whose CHECKPOINT counted with Spark actions: (superstep, batch_size,
+# fetched, denied, discovered, new_urls, pending_after, seen_total); the
+# virtual clock advances one tick per superstep from T0. Superstep 1
+# only fetches robots.txt (every host is unknown), so its batch is empty.
+ROBOTS_DEDUP_CARRY_STATS = [
+    (1, 0, 0, 0, 0, 0, 10, 10),
+    (2, 7, 7, 0, 12, 10, 20, 20),
+    (3, 10, 10, 0, 18, 15, 34, 35),
+    (4, 6, 6, 0, 13, 7, 40, 42),
+    (5, 16, 16, 0, 33, 13, 53, 55),
+]
+
+
+def test_superstep_jobs_flat_as_tables_grow(spark, mini_cfg, mini_web,
+                                             tmp_path):
+    """Tables that never compact gain one delta per superstep (robots
+    rules, documents with content hashes, queue state), and the frontier
+    gains one between compactions (compact_every=4). Deltas are read with
+    the schema their manifest entry recorded, so reading more of them
+    launches no more jobs: superstep 5 reads three more deltas of every
+    never-compacted table than superstep 2 and launches no more jobs
+    (its frontier is a lone compacted delta, which skips the keep-latest
+    window), and supersteps 2-5 stay within two jobs of each other (a
+    superstep now and then launches one job more, as AQE plans it). The
+    counters equal the recorded ones, superstep 4's observed on its
+    compaction."""
+    import dataclasses
+    from datetime import timedelta
+
+    from sparkcrawl.plans.superstep import CrawlRun
+
+    cfg = dataclasses.replace(
+        mini_cfg, compact_every=4, fetch_robots=True, dedup_documents=True,
+        budget_carry=True, active_queues=2,
+    )
+    run = CrawlRun(spark, str(tmp_path), cfg, mini_web["web"],
+                   mini_web["robots"])
+    run.bootstrap(mini_web["seeds"])
+    stats, jobs = _jobs_per_superstep(spark, run, 5)
+
+    assert jobs[4] <= jobs[1], jobs
+    assert max(jobs[1:]) - min(jobs[1:]) <= 2, jobs
+    assert [
+        (st.superstep, st.batch_size, st.fetched, st.denied, st.discovered,
+         st.new_urls, st.pending_after, st.seen_total) for st in stats
+    ] == ROBOTS_DEDUP_CARRY_STATS
+    assert [st.virtual_time for st in stats] == [
+        cfg.t0 + timedelta(seconds=i) for i in range(5)
+    ]
 
 
 def test_minhash_signatures_single_pass(spark):

@@ -41,10 +41,21 @@ def test_kill_resume_identical(spark, mini_cfg, mini_web, tmp_path_factory):
     assert state_a == state_b
 
 
+def _checkpoint_rows(run, spark):
+    """Checkpoint-log rows without snapshot_id (a replayed superstep
+    commits one more frontier version than a clean run)."""
+    return [
+        (r["superstep"], r["virtual_time"], r["urls_seen_count"],
+         r["fetched_count"], r["discovered_count"])
+        for r in run.checkpoints.read(spark).orderBy("superstep").collect()
+    ]
+
+
 def test_midstep_kill_no_duplicate_appends(spark, mini_cfg, mini_web, tmp_path_factory):
     """Regression (ADVICE r1): a kill AFTER documents/fetch_log append but
     BEFORE the superstep checkpoint must not duplicate rows on replay —
-    tagged deltas make the appends idempotent per superstep."""
+    tagged deltas make the appends idempotent per superstep. The replayed
+    superstep's counters and checkpoint row equal a clean run's."""
     work = str(tmp_path_factory.mktemp("midstep"))
     run = CrawlRun(spark, work, mini_cfg, mini_web["web"], mini_web["robots"])
     run.run(mini_web["seeds"], max_supersteps=2)
@@ -66,7 +77,7 @@ def test_midstep_kill_no_duplicate_appends(spark, mini_cfg, mini_web, tmp_path_f
 
     # fresh process resumes: superstep 3 replays
     run2 = CrawlRun(spark, work, mini_cfg, mini_web["web"], mini_web["robots"])
-    run2.resume(max_supersteps=1)
+    replayed = run2.resume(max_supersteps=1)
     assert run2.last_checkpoint()["superstep"] == 3
 
     log = run2.fetch_log.read(spark)
@@ -77,7 +88,9 @@ def test_midstep_kill_no_duplicate_appends(spark, mini_cfg, mini_web, tmp_path_f
     # uninterrupted 3-superstep run
     run_c = CrawlRun(spark, str(tmp_path_factory.mktemp("clean3")), mini_cfg,
                      mini_web["web"], mini_web["robots"])
-    run_c.run(mini_web["seeds"], max_supersteps=3)
+    clean = run_c.run(mini_web["seeds"], max_supersteps=3)
+    assert replayed == clean[2:]
+    assert _checkpoint_rows(run2, spark) == _checkpoint_rows(run_c, spark)
     assert run2.documents.read(spark).count() == run_c.documents.read(spark).count()
     state_c, order_c = _final_state(run_c, spark)
     state_b, order_b = _final_state(run2, spark)
@@ -136,9 +149,18 @@ def test_vacuum_cadence_preserves_parity_and_resume(
     assert state_a == state_b
 
 
+def _as_unrecorded(store, manifest):
+    """``manifest`` with every delta entry's recorded schema removed, as
+    workdirs written before schemas were recorded have it."""
+    for d in manifest["deltas"]:
+        d.pop("schema", None)
+    store._write_manifest(manifest)
+
+
 def _rewrite_with_column(spark, store, name, col):
     """Rewrite every committed delta of ``store`` in place with an extra
-    column — a workdir written before the engine stopped writing it."""
+    column and no recorded schema — a workdir written before the engine
+    stopped writing the column."""
     import os
     import shutil
 
@@ -149,23 +171,74 @@ def _rewrite_with_column(spark, store, name, col):
         df.withColumn(name, col).write.partitionBy(*parts).parquet(tmp)
         shutil.rmtree(d["path"])
         os.replace(tmp, d["path"])
+    _as_unrecorded(store, store._read_manifest())
+
+
+def _to_parquet_checkpoints(spark, log):
+    """Move the manifest checkpoint rows into one parquet delta per row,
+    with the retired ``per_partition_counts`` column: the checkpoint log
+    of workdirs written before rows lived in the manifest. The pinned
+    frontier snapshot loses its recorded schemas too."""
+    import os
+    from datetime import datetime
+
+    from sparkcrawl.schemas import CHECKPOINT_SCHEMA
+
+    manifest = log.store._read_manifest()
+    for seq, r in enumerate(manifest.pop("rows")):
+        row = {**r, "virtual_time": datetime.fromisoformat(r["virtual_time"])}
+        path = os.path.join(log.store.root, "data", f"delta-{seq:06d}-legacy")
+        spark.createDataFrame(
+            [tuple(row[f.name] for f in CHECKPOINT_SCHEMA.fields)],
+            CHECKPOINT_SCHEMA,
+        ).withColumn(
+            "per_partition_counts", F.create_map(F.lit("0"), F.lit(1).cast("long"))
+        ).withColumn("_delta_seq", F.lit(seq)).write.parquet(path)
+        manifest["deltas"].append({"path": path, "seq": seq})
+        manifest["next_seq"] = seq + 1
+    for d in manifest["meta"]["last_frontier_snapshot"]:
+        d.pop("schema", None)
+    _as_unrecorded(log.store, manifest)
+
+
+# checkpoint rows and `run_crawl --report saturation` rows of the 4-superstep
+# mini crawl as the engine wrote them while checkpoints were parquet deltas
+LEGACY_CHECKPOINTS = [
+    (0, "2026-01-01 00:00:00", "frontier-v1", 10, 0, 0),
+    (1, "2026-01-01 00:00:01", "frontier-v2", 23, 9, 16),
+    (2, "2026-01-01 00:00:02", "frontier-v3", 42, 13, 23),
+    (3, "2026-01-01 00:00:03", "frontier-v4", 56, 16, 33),
+    (4, "2026-01-01 00:00:04", "frontier-v6", 65, 14, 28),
+]
+LEGACY_SATURATION = [
+    (0, 10, 0, 0, 10, None, None, None, None),
+    (1, 23, 9, 16, 13, 1.777778, 0.8125, 0.1875, 1.3),
+    (2, 42, 13, 23, 19, 1.769231, 0.826087, 0.173913, 0.826087),
+    (3, 56, 16, 33, 14, 2.0625, 0.424242, 0.575758, 0.333333),
+    (4, 65, 14, 28, 9, 2.0, 0.321429, 0.678571, 0.160714),
+]
 
 
 def test_resume_reads_legacy_lineage_columns(spark, mini_cfg, mini_web,
-                                             tmp_path_factory):
-    """Frontier deltas that still carry ``lineage_partition`` and
-    checkpoint rows that still carry ``per_partition_counts`` union with
-    the new deltas that lack them: the crawl resumes and matches the
-    sequential reference."""
+                                             tmp_path_factory, capsys):
+    """Frontier deltas that still carry ``lineage_partition``, without
+    recorded schemas, and parquet checkpoint deltas that still carry
+    ``per_partition_counts`` union with what the engine writes now (flat
+    deltas with schemas, manifest checkpoint rows): the crawl resumes and
+    matches the sequential reference, and the checkpoint log, the
+    saturation report and the change history read as they did."""
+    import hashlib
+
+    from sparkcrawl.plans.freshness import url_change_history
     from tests.reference_sim import SeqCrawler
+    from tests.test_cli_reports import _report_rows
 
     work = str(tmp_path_factory.mktemp("legacy"))
     run = CrawlRun(spark, work, mini_cfg, mini_web["web"], mini_web["robots"])
     run.run(mini_web["seeds"], max_supersteps=2)
     _rewrite_with_column(spark, run.frontier.store, "lineage_partition",
                          F.spark_partition_id())
-    _rewrite_with_column(spark, run.checkpoints.store, "per_partition_counts",
-                         F.create_map(F.lit("0"), F.lit(1).cast("long")))
+    _to_parquet_checkpoints(spark, run.checkpoints)
     assert "lineage_partition" in spark.read.parquet(
         run.frontier.store.snapshot()[0]["path"]).columns
 
@@ -173,12 +246,32 @@ def test_resume_reads_legacy_lineage_columns(spark, mini_cfg, mini_web,
     run2.resume(max_supersteps=2)
     frontier = run2.frontier.read(spark)
     assert "lineage_partition" not in frontier.columns
-    assert run2.checkpoints.read(spark).count() == 5
+    assert len(run2.checkpoints.store.snapshot()) == 3  # parquet rows 0-2
+    ckpt = run2.checkpoints.read(spark)
+    assert "per_partition_counts" not in ckpt.columns
+    assert [
+        (r[0], str(r[1]), *r[2:]) for r in ckpt.orderBy("superstep").collect()
+    ] == LEGACY_CHECKPOINTS
+    assert [
+        tuple(r[k] for k in ("superstep", "seen_total", "fetched", "discovered",
+                             "new_seen", "yield_per_fetch", "novelty_rate",
+                             "saturation", "seen_growth_rate"))
+        for r in _report_rows(capsys, work, "saturation")
+    ] == LEGACY_SATURATION
     sim = SeqCrawler(mini_cfg, mini_web["web_pdf"], mini_web["robots_pdf"])
     sim.run(mini_web["seeds_pdf"], max_supersteps=4)
     _, order = _final_state(run2, spark)
     assert order == sim.fetch_log
     assert sorted(r["url_hash"] for r in frontier.collect()) == sim.seen_hashes
+    clock = {st["superstep"]: st["next_time"].replace(tzinfo=None)
+             for st in sim.stats}
+    assert sorted(
+        (r["url_hash"], r["ts"], r["changed"])
+        for r in url_change_history(spark, work).collect()
+    ) == sorted(
+        (hashlib.sha1(url.encode()).hexdigest(), clock[s], status == 200)
+        for s, _, url, status in sim.fetch_log_full if status in (200, 304)
+    )
 
 
 def _queue_dirs(path):

@@ -177,3 +177,37 @@ def test_vacuum_workdir_respects_checkpoint_pins(spark, mini_cfg, mini_web, tmp_
     assert run.frontier.read(spark).count() == seen_before
     more = run.resume(max_supersteps=1)
     assert more and more[0].fetched >= 0
+
+
+def test_recorded_schema_reads_launch_no_job(spark, tmp_path):
+    """Each delta's manifest entry records the schema it was written with,
+    so reading a table of several deltas infers nothing and launches no
+    Spark job; a manifest written before schemas were recorded still
+    reads the same rows, with one schema-inference job per delta."""
+    store = ParquetManifestStore(str(tmp_path), "t")
+    for i in range(3):
+        store.append(spark.createDataFrame([(f"h{i}", i)], "url_hash string, val long"))
+    assert all("schema" in d for d in store.snapshot())
+
+    sc = spark.sparkContext
+
+    def read_jobs(group):
+        sc.setJobGroup(group, "delta read")
+        try:
+            df = store.read_raw(spark)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    recorded, jobs = read_jobs("recorded-schema-read")
+    assert jobs == 0
+    rows = sorted(tuple(r) for r in recorded.collect())
+    assert rows == [("h0", 0, 0), ("h1", 1, 1), ("h2", 2, 2)]
+
+    manifest = store._read_manifest()
+    for d in manifest["deltas"]:
+        del d["schema"]
+    store._write_manifest(manifest)
+    inferred, jobs = read_jobs("inferred-schema-read")
+    assert jobs == 3
+    assert sorted(tuple(r) for r in inferred.collect()) == rows

@@ -71,19 +71,24 @@ def test_documents_span_schema_and_order(crawl, spark):
 
 def test_control_channel_stop_and_add_seeds(spark, mini_cfg, mini_web, tmp_path_factory):
     """S7: the workdir control file stops the loop and injects seeds
-    into the live run (ZMQ mgmt channel re-expressed for batch)."""
+    into the live run (ZMQ mgmt channel re-expressed for batch). Every
+    SuperstepStats field matches the sequential reference given the same
+    injection, at the default compact_every=4 (superstep 4 compacts)."""
+    import dataclasses
     import json
     import os
 
+    from tests.reference_sim import SeqCrawler, engine_stats
+
+    cfg = dataclasses.replace(mini_cfg, compact_every=4)
     work = str(tmp_path_factory.mktemp("ctl"))
-    run = CrawlRun(spark, work, mini_cfg, mini_web["web"], mini_web["robots"])
-    run.run(mini_web["seeds"].limit(3), max_supersteps=2)
+    run = CrawlRun(spark, work, cfg, mini_web["web"], mini_web["robots"])
+    stats = run.run(mini_web["seeds"].limit(3), max_supersteps=2)
 
     # stop: command consumed, no superstep runs
     with open(os.path.join(work, "control.json"), "w") as f:
         json.dump({"stop": True}, f)
-    stats = run.resume(max_supersteps=3)
-    assert stats == []
+    assert run.resume(max_supersteps=3) == []
     assert run.last_checkpoint()["superstep"] == 2
     assert not os.path.exists(os.path.join(work, "control.json"))
 
@@ -91,9 +96,14 @@ def test_control_channel_stop_and_add_seeds(spark, mini_cfg, mini_web, tmp_path_
     new_url = "http://host009.example/page/3"
     with open(os.path.join(work, "control.json"), "w") as f:
         json.dump({"add_seeds": [{"url": new_url, "priority": 2}]}, f)
-    run.resume(max_supersteps=1)
+    stats += run.resume(max_supersteps=2)
     row = run.frontier.read(spark).filter(F.col("url") == new_url).collect()
     assert len(row) == 1
+
+    sim = SeqCrawler(cfg, mini_web["web_pdf"], mini_web["robots_pdf"])
+    sim.run(mini_web["seeds_pdf"].head(3), max_supersteps=4,
+            add_seeds={3: [(new_url, 2)]})
+    assert engine_stats(stats) == sim.superstep_stats
 
 
 def test_all_seeds_rejected_crawl_ends_cleanly(spark, mini_cfg, mini_web,
