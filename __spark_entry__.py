@@ -130,8 +130,9 @@ def _synthetic_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§3.4 steps 1-3 on the synthetic frontier: eligibility -> two-stage
-    per-queue top-k -> politeness slots. The engine's real operators."""
+    """§3.4 steps 1-3 on the synthetic frontier: eligibility -> per-queue
+    top-k -> politeness slots, one shuffle on queue. The engine's real
+    operators."""
     from sparkcrawl.config import CrawlConfig
     from sparkcrawl.operators.schedule import per_queue_topk, politeness_slots
 

@@ -90,9 +90,10 @@ class CrawlConfig:
     t0: datetime = T0
     tick_seconds: float = 1.0
     # --- skew (north_rule: salted keys defuse hot-host skew) ---
-    # per_queue_topk salts UNCONDITIONALLY (two-stage rank-limit): a
-    # threshold knob would save nothing — the salted first stage is the
-    # same shuffle either way — and a conditional pre-count costs a pass.
+    # Unused by the engine: per_queue_topk's partial WindowGroupLimit
+    # already bounds a hot queue to k rows per map task below the queue
+    # exchange, with no salt and no second shuffle. Kept so configs that
+    # set it (bench.py) still construct.
     skew_salt_buckets: int = 4
     # --- registered domain (C9) ---
     # False = host-based parity mode (pins the goldens; the reference

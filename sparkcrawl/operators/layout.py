@@ -136,12 +136,11 @@ def frontcoding_estimate(urls: DataFrame, per_host_cap: int = 256,
     coded_bytes, savings_frac) where coded = suffix bytes + 2 bytes
     per row (varint LCP length + suffix length).
 
-    Plan shape: the per-host cap is the SAME two-stage salted
-    rank-limit as per_queue_topk (no task ever sees a whole hot host's
-    URL list); then one lag window + LCP fold over the ≤ cap-row
-    groups only. The LCP is a character fold inside codegen
-    (aggregate over sequence) — no UDF; the oracle replays it as a
-    correlated max-prefix probe.
+    Plan shape: the per-host cap is a two-stage salted rank-limit
+    (no task ever sees a whole hot host's URL list); then one lag
+    window + LCP fold over the ≤ cap-row groups only. The LCP is a
+    character fold inside codegen (aggregate over sequence) — no UDF;
+    the oracle replays it as a correlated max-prefix probe.
     """
     from sparkcrawl.functions.hashing import md5_bucket
     from pyspark.sql import Window as W

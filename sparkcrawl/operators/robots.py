@@ -173,16 +173,20 @@ def robots_gate(batch: DataFrame, robots: DataFrame, user_agent: str = "*") -> D
         F.when(F.col("_match"), F.length("_r_prefix")).otherwise(F.lit(-1)).alias("l"),
         F.col("_r_allow").cast("int").alias("a"),
     )
+    # A batch that carries ``queue`` (a function of the URL's host) groups
+    # on (queue, url_hash): the same groups, and a per-queue scheduler's
+    # hash partitioning already satisfies them, so the gate adds no exchange.
     allowed = F.when(F.col("_match"), F.col("_r_allow")).otherwise(F.lit(True))
-    payload_cols = [c for c in batch.columns if c != "url_hash"]
-    best = matched.groupBy("url_hash").agg(
+    keys = ["queue", "url_hash"] if "queue" in batch.columns else ["url_hash"]
+    payload_cols = [c for c in batch.columns if c not in keys]
+    best = matched.groupBy(*keys).agg(
         F.max_by(
             F.struct(*[F.col(c) for c in payload_cols], allowed.alias("robots_allowed")),
             order_key,
         ).alias("_w")
     )
     return best.select(
-        *[F.col(f"_w.{c}").alias(c) if c != "url_hash" else F.col("url_hash")
+        *[F.col(c) if c in keys else F.col(f"_w.{c}").alias(c)
           for c in batch.columns],
         F.col("_w.robots_allowed").alias("robots_allowed"),
     )

@@ -13,10 +13,17 @@ Scale notes (10^10-row frontier):
   - eligibility predicate (state/next_date) is a plain column filter →
     Catalyst pushes it into the Parquet/Iceberg scan (partition + min/max
     pruning on next_date).
-  - per-queue top-k is TWO-STAGE: local top-k per (queue, salt) shard
-    first, then top-k per queue over the reduced set — the hot-host
-    skew defusal demanded by north_rule ("salted keys"). The second
-    window sees at most num_queues * salt_buckets * cap rows.
+  - per-queue top-k is ONE window on ``queue`` whose rank filter Spark
+    turns into a WindowGroupLimit: its partial half runs map-side, below
+    the ``queue`` exchange, so a hot queue ships at most k rows per map
+    task and the final window sees at most tasks * k rows per queue.
+    That is the hot-host skew defusal north_rule asks of salted keys,
+    without a second shuffle.
+  - ELIGIBLE -> SELECT -> POLITE -> GATE shuffles once, on ``queue``:
+    ``queue`` is a function of the registered domain, hence of ``host``
+    and of ``url_hash``, so the politeness window keyed on (queue, host)
+    and the robots gate keyed on (queue, url_hash) reuse the top-k's
+    hash partitioning and add no exchange.
 """
 
 from __future__ import annotations
@@ -54,15 +61,20 @@ def per_queue_topk(eligible_df: DataFrame, cfg: CrawlConfig, k: int,
                    carry: DataFrame | None = None) -> DataFrame:
     """W1+W2: top-k rows per queue ordered by (next_date, priority, url_hash).
 
-    Two-stage (salted) rank-limit: defuses hot-queue skew because the
-    first window partitions on (queue, salt) — no single task ever sees
-    a whole hot queue. Equivalent to a single top-k since per-shard
-    top-k is a superset of the global top-k members in that shard.
+    One rank window on ``queue``. Catalyst infers a WindowGroupLimit from
+    the rank filter and splits it around the exchange: the partial limit
+    keeps at most k rows per queue in each map task, so no task ever
+    ships a whole hot queue. Spark infers it only for a limit of at most
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by default);
+    above that every eligible row is shuffled and sorted (``CrawlRun``
+    warns about such configs).
 
     ``carry`` is an optional small (queue, carry) DataFrame (A2
     cross-superstep budget remainder, broadcast): each queue's effective
     k becomes min(heap_size, k + carry) — the W2 heap cap still bounds
-    the batch, so the superstep stays config-sized.
+    the batch, so the superstep stays config-sized. ``k_eff`` is then a
+    column, not a literal, so the filter also carries the literal
+    ``heap_size`` bound for the limit to be inferred from.
     """
     order = [F.asc("next_date"), F.asc("priority"), F.asc("url_hash")]
     if carry is not None:
@@ -74,19 +86,10 @@ def per_queue_topk(eligible_df: DataFrame, cfg: CrawlConfig, k: int,
         )
     else:
         k_eff = F.lit(k)
-    salted = eligible_df.withColumn(
-        "_salt", md5_bucket(F.col("url_hash"), cfg.skew_salt_buckets)
-    )
-    w_local = W.partitionBy("queue", "_salt").orderBy(*order)
-    local = (
-        salted.withColumn("_rn_local", F.row_number().over(w_local))
-        .filter(F.col("_rn_local") <= k_eff)
-        .drop("_rn_local", "_salt")
-    )
     w_queue = W.partitionBy("queue").orderBy(*order)
     out = (
-        local.withColumn("_rn", F.row_number().over(w_queue))
-        .filter(F.col("_rn") <= k_eff)
+        eligible_df.withColumn("_rn", F.row_number().over(w_queue))
+        .filter((F.col("_rn") <= F.lit(cfg.heap_size)) & (F.col("_rn") <= k_eff))
         .drop("_rn")
     )
     return out.drop("carry") if carry is not None else out
@@ -102,6 +105,10 @@ def politeness_slots(batch: DataFrame, cfg: CrawlConfig,
     ``scheduled_offset`` column (slot * crawl_delay(host)) orders the
     per-host fetch batch. ``crawl_delays`` is an optional small
     (host, crawl_delay) DataFrame from robots.txt (R3) — broadcast.
+
+    A batch that carries ``queue`` (a function of ``host``) is windowed
+    on (queue, host): the same per-host groups, and a per-queue top-k's
+    hash partitioning already satisfies it, so slotting adds no exchange.
     """
     if crawl_delays is not None:
         batch = batch.join(
@@ -109,7 +116,8 @@ def politeness_slots(batch: DataFrame, cfg: CrawlConfig,
         )
     else:
         batch = batch.withColumn("crawl_delay", F.lit(None).cast("double"))
-    w_host = W.partitionBy("host").orderBy(
+    keys = ["queue", "host"] if "queue" in batch.columns else ["host"]
+    w_host = W.partitionBy(*keys).orderBy(
         F.asc("next_date"), F.asc("priority"), F.asc("url_hash")
     )
     return (

@@ -34,6 +34,7 @@ ZMQ management socket.
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
@@ -136,6 +137,22 @@ def frontier_rows_from_urls(
     return new_frontier_rows(with_frontier_keys(canon, cfg), superstep, t0, priority_col)
 
 
+def _warn_if_topk_limit_not_inferred(spark: SparkSession, cfg: CrawlConfig) -> None:
+    """Log once when the per-queue top-k bound exceeds the limit up to
+    which Spark turns the rank filter into a WindowGroupLimit (see
+    schedule.per_queue_topk): every eligible row is then shuffled."""
+    threshold = int(spark.conf.get(
+        "spark.sql.optimizer.windowGroupLimitThreshold", "1000"))
+    k = cfg.heap_size if cfg.budget_carry else min(cfg.heap_size, cfg.per_queue_budget)
+    if k > threshold:
+        logging.getLogger(__name__).warning(
+            "per-queue top-k of %d exceeds "
+            "spark.sql.optimizer.windowGroupLimitThreshold=%d: the scheduler "
+            "shuffles every eligible row, with no map-side rank limit",
+            k, threshold,
+        )
+
+
 class CrawlRun:
     """One crawl over one workdir; resumable."""
 
@@ -206,7 +223,13 @@ class CrawlRun:
             capacity_per_shard=cfg.bloom_capacity_per_shard,
             fpp=cfg.bloom_fpp,
         )
-        self._delays = crawl_delays(robots, cfg.user_agent) if robots is not None else None
+        # static robots: the per-host delays are one aggregate over a
+        # table that never changes, so they are computed once per run
+        self._delays = (
+            crawl_delays(robots, cfg.user_agent).persist()
+            if robots is not None else None
+        )
+        _warn_if_topk_limit_not_inferred(spark, cfg)
         # optional (host, ip) mapping for IP-keyed politeness; unmapped
         # hosts fall back to the deterministic synthetic IP inside
         # ip_politeness_slots, so the file is a refinement, not a gate
@@ -418,18 +441,17 @@ class CrawlRun:
         log_df = (
             ranked_in_total_order(spark, batch)
             .filter(F.col("robots_allowed"))
-            .select("url_hash", "rank", "slot")
+            .select("url_hash", "url", "rank", "slot")
             .join(extracted.select("url_hash", "status_code"), "url_hash", "left")
             .select(
                 F.lit(superstep).alias("superstep"),
                 "rank",
                 "slot",
+                "url",
                 "url_hash",
                 "status_code",
                 outcome_class(F.col("status_code")).alias("outcome"),
             )
-            .join(batch.select("url_hash", "url"), "url_hash")
-            .select("superstep", "rank", "slot", "url", "url_hash", "status_code", "outcome")
         )
         # one log row per robots-allowed batch row: the fetched counter
         log_df, obs_fetched = observe(log_df)

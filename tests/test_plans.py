@@ -48,19 +48,47 @@ def test_small_dim_join_is_broadcast(spark, queries):
     assert "SortMergeJoin" not in p
 
 
+def _rank_limit_around_one_exchange(p):
+    """The per-queue top-k plan shape: one hash exchange, a Partial
+    WindowGroupLimit below it (map-side) and a Final one above it."""
+    lines = p.splitlines()
+    exch = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln]
+    partial = [i for i, ln in enumerate(lines)
+               if "WindowGroupLimit" in ln and ln.rstrip().endswith("Partial")]
+    final = [i for i, ln in enumerate(lines)
+             if "WindowGroupLimit" in ln and ln.rstrip().endswith("Final")]
+    assert len(exch) == len(partial) == len(final) == 1, p
+    assert final[0] < exch[0] < partial[0], p  # plan text prints top-down
+
+
 def test_topk_gets_rank_limit_pushdown(spark, queries):
     """W1/W2: Catalyst must apply WindowGroupLimit (partial + final) to
-    the per-queue top-k — without it every row of a hot queue is sorted."""
-    p = plan_of(queries["crawl_schedule_flagship"](spark, SF), "simple")
-    assert p.count("WindowGroupLimit") >= 3  # salted stage (partial+final) + queue stage
-    assert "Partial" in p and "Final" in p
+    the per-queue top-k — without it every row of a hot queue is sorted
+    and shuffled. With a carried budget the per-queue k is a column, and
+    the literal heap_size bound in the filter still yields the limit."""
+    from pyspark.sql import functions as F
+
+    from sparkcrawl.config import CrawlConfig
+    from sparkcrawl.operators.schedule import per_queue_topk
+
+    _rank_limit_around_one_exchange(
+        plan_of(queries["crawl_schedule_flagship"](spark, SF), "simple"))
+    cfg = CrawlConfig(num_queues=entry_mod.NQ, per_queue_budget=entry_mod.TOPK,
+                      heap_size=2 * entry_mod.TOPK)
+    frontier = entry_mod._synthetic_frontier(spark, SF)
+    carry = spark.range(entry_mod.NQ).select(
+        F.col("id").alias("queue"), F.lit(3).alias("carry"))
+    p = plan_of(per_queue_topk(frontier, cfg, entry_mod.TOPK, carry), "simple")
+    _rank_limit_around_one_exchange(p)
+    assert f"row_number(), {2 * entry_mod.TOPK}, Partial" in p, p
 
 
 def test_flagship_exchange_budget(spark, queries):
-    """The schedule pipeline needs exactly 3 shuffles: (queue,salt),
-    (queue), (host). More means a regression in operator composition."""
+    """The schedule pipeline needs exactly 1 shuffle, on queue: the
+    politeness window is keyed on (queue, host) and host determines
+    queue. More means a regression in operator composition."""
     p = plan_of(queries["crawl_schedule_flagship"](spark, SF), "simple")
-    assert len(re.findall(r"Exchange hashpartitioning", p)) == 3
+    assert len(re.findall(r"Exchange hashpartitioning", p)) == 1
 
 
 def test_anti_join_stays_join_not_loop(spark, queries):
@@ -183,8 +211,11 @@ def test_frontier_rows_single_arrow_eval(spark):
 # once frontier deltas were written flat (44 with the per-queue hive
 # layout and its empty-delta check), then once CHECKPOINT took its
 # counters from observations, committed its row into the manifest and
-# deltas were read with their recorded schemas (42 before).
-SUPERSTEP_JOB_BUDGET = 25
+# deltas were read with their recorded schemas (42 before), then once
+# the fetch batch shuffled only on queue, the fetch log stopped
+# re-joining the batch for its url and the static crawl delays were
+# computed once per run (25 before).
+SUPERSTEP_JOB_BUDGET = 20
 
 
 def _jobs_per_superstep(spark, run, n):
@@ -245,6 +276,52 @@ def test_superstep_link_path_and_job_budget(spark, mini_cfg, mini_web,
     sim = SeqCrawler(cfg, mini_web["web_pdf"], mini_web["robots_pdf"])
     sim.run(mini_web["seeds_pdf"], max_supersteps=4)
     assert engine_stats(stats) == sim.superstep_stats
+
+
+def _outside_cached(p):
+    """Plan text without the subtrees under InMemoryRelation: a persisted
+    input's own plan, which runs when the cache fills, not per query."""
+    out, cached_at = [], None
+    for ln in p.splitlines():
+        depth = len(ln) - len(ln.lstrip(" :+-"))
+        if cached_at is not None and depth > cached_at:
+            continue
+        cached_at = depth if "InMemoryRelation" in ln else None
+        out.append(ln)
+    return "\n".join(out)
+
+
+def test_superstep_fetch_batch_shuffles_once(spark, mini_cfg, mini_web,
+                                             tmp_path, monkeypatch):
+    """ELIGIBLE -> SELECT -> POLITE -> GATE of a real superstep (static
+    robots, compacted frontier) is one hash exchange, on queue: the
+    top-k's partitioning serves the politeness window on (queue, host)
+    and the gate's aggregate on (queue, url_hash). The plan is taken
+    inside the superstep, with the frontier and the crawl delays
+    persisted as the superstep holds them."""
+    import dataclasses
+
+    import sparkcrawl.plans.superstep as sup
+
+    plans = []
+    real = sup.robots_gate
+
+    def capture(*a, **kw):
+        gated = real(*a, **kw)
+        plans.append(_outside_cached(plan_of(gated, "simple")))
+        return gated
+
+    cfg = dataclasses.replace(mini_cfg, compact_every=1)
+    run = sup.CrawlRun(spark, str(tmp_path), cfg, mini_web["web"],
+                       mini_web["robots"])
+    run.bootstrap(mini_web["seeds"])
+    run.resume(max_supersteps=1)  # compacts: superstep 2 reads one delta
+    monkeypatch.setattr(sup, "robots_gate", capture)
+    run.resume(max_supersteps=1)
+    assert len(plans) == 1
+    keys = re.findall(r"Exchange hashpartitioning\((\w+)#", plans[0])
+    assert keys == ["queue"], plans[0]
+    assert "InMemoryRelation" in plans[0]  # frontier and delays are cached
 
 
 # SuperstepStats of the crawl below as recorded from the engine version

@@ -242,3 +242,40 @@ def test_paragraph_dedup_idempotent_and_conserving(spark, paras_per_doc):
         assert all(any(x == y for y in it) for x in kept), (p, kept)
     # one winner per distinct paragraph corpus-wide
     assert len(all_kept) == len(set(all_kept))
+
+
+label = st.text(alphabet=st.sampled_from("abcdefghijklmnopqrstuvwxyz0123456789-"),
+                min_size=1, max_size=10)
+hosts = st.builds(
+    lambda labels, suffix: ".".join(labels + [suffix]),
+    st.lists(label, min_size=1, max_size=4),
+    st.sampled_from(["com", "example", "co.uk", "org.au", "github.io", "de"]),
+)
+
+
+@settings(**SETTINGS)
+@given(st.lists(st.tuples(hosts, st.lists(label, min_size=1, max_size=4)),
+                min_size=1, max_size=25))
+def test_frontier_keys_map_each_host_to_one_queue(spark, host_paths):
+    """host -> queue is a function, in host mode and with eTLD+1
+    (use_public_suffix): the scheduler keys its politeness window on
+    (queue, host) and its robots gate on (queue, url_hash) on the
+    strength of it, so every URL of a host must carry that host's one
+    queue and one registered domain."""
+    from sparkcrawl.config import CrawlConfig
+    from sparkcrawl.plans.superstep import with_frontier_keys
+
+    rows = [(f"http://{h}/{p}", h) for h, paths in host_paths for p in paths]
+    df = spark.createDataFrame(rows, "url string, host string")
+    for cfg in (CrawlConfig(num_queues=7),
+                CrawlConfig(num_queues=7, use_public_suffix=True)):
+        per_host = (
+            with_frontier_keys(df, cfg).groupBy("host")
+            .agg(F.countDistinct("queue").alias("q"),
+                 F.countDistinct("registered_domain").alias("d"),
+                 F.min("queue").alias("queue"))
+            .collect()
+        )
+        assert {r["host"] for r in per_host} == {h for h, _ in host_paths}
+        assert all(r["q"] == 1 and r["d"] == 1 for r in per_host), per_host
+        assert all(0 <= r["queue"] < 7 for r in per_host)

@@ -507,3 +507,24 @@ def test_apply_aging_boost(spark):
     assert got["wfloor"] == 1   # floored at priority 1
     assert got["future"] == 5   # not due yet
     assert got["gone"] == 5     # only pending rows age
+
+
+def test_crawlrun_warns_when_topk_limit_is_not_inferred(spark, tmp_path, caplog):
+    """Spark turns the top-k rank filter into a WindowGroupLimit only up
+    to spark.sql.optimizer.windowGroupLimitThreshold (1000 by default):
+    a config whose per-queue k exceeds it logs one warning; the carry
+    path's bound is heap_size, the plain path's min(heap_size, budget)."""
+    import logging
+
+    from sparkcrawl.plans.superstep import CrawlRun
+
+    def warnings_for(**kw):
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger="sparkcrawl.plans.superstep"):
+            CrawlRun(spark, str(tmp_path / str(len(kw))), CrawlConfig(**kw), None)
+        return [r for r in caplog.records if "windowGroupLimitThreshold" in r.message]
+
+    assert warnings_for() == []
+    assert warnings_for(heap_size=1001) == []  # k = per_queue_budget = 50
+    assert len(warnings_for(heap_size=1001, budget_carry=True)) == 1
+    assert len(warnings_for(heap_size=2000, per_queue_budget=1500)) == 1

@@ -3,6 +3,8 @@
 import json
 import os
 
+import pytest
+
 from sparkcrawl.sources.store import FrontierTable, ParquetManifestStore
 
 
@@ -102,14 +104,107 @@ def _one(spark):
 
 
 def test_manifest_commit_is_atomic_replace(spark, tmp_path):
+    """Each commit renames a fsynced temp file to a NEW version's name,
+    and leaves no temp file behind."""
     store = ParquetManifestStore(str(tmp_path), "t")
     store.append(_df(spark, [("a", 1)]))
-    with open(store._manifest_path) as f:
+    assert sorted(os.listdir(store.root)) == ["data", "manifest-1.json"]
+    with open(os.path.join(store.root, "manifest-1.json")) as f:
         m = json.load(f)
     assert m["version"] == 1 and len(m["deltas"]) == 1
-    # no tmp files left behind
-    leftovers = [p for p in os.listdir(store.root) if p.startswith("manifest.json.tmp")]
-    assert leftovers == []
+    store.append(_df(spark, [("b", 2)]))
+    assert sorted(os.listdir(store.root)) == [
+        "data", "manifest-1.json", "manifest-2.json"]
+    assert store.version == 2 and store.num_deltas == 2
+
+
+def test_kill_after_temp_write_keeps_previous_version(spark, tmp_path,
+                                                       monkeypatch):
+    """A commit killed between its temp write and its rename leaves the
+    previous version as the table; the stray temp file is never read,
+    the next commit succeeds, and vacuum reclaims the temp file and the
+    superseded version."""
+    import sparkcrawl.sources.store as store_mod
+
+    store = ParquetManifestStore(str(tmp_path), "t")
+    store.append(_df(spark, [("a", 1)]))
+
+    class Killed(Exception):
+        pass
+
+    def killed(src, dst):
+        raise Killed(dst)
+
+    monkeypatch.setattr(store_mod.os, "rename", killed)
+    with pytest.raises(Killed):
+        store.append(_df(spark, [("b", 2)]))
+    monkeypatch.undo()
+    temps = [n for n in os.listdir(store.root) if ".tmp." in n]
+    assert len(temps) == 1
+    assert store.version == 1
+    assert [(r["url_hash"], r["val"]) for r in store.read_raw(spark).collect()] \
+        == [("a", 1)]
+
+    store.append(_df(spark, [("c", 3)]))
+    assert store.version == 2
+    assert sorted(r["url_hash"] for r in store.read_raw(spark).collect()) \
+        == ["a", "c"]
+    store.vacuum()
+    assert sorted(n for n in os.listdir(store.root) if n != "data") \
+        == ["manifest-2.json"]
+
+
+def test_legacy_manifest_json_reads_and_vacuums(spark, tmp_path):
+    """A table whose only manifest is a plain ``manifest.json`` (older
+    workdirs) reads as before; the next commit writes the next version
+    under a new name, and vacuum_workdir finds tables in either layout
+    and reclaims the superseded legacy file."""
+    from sparkcrawl.sources.store import vacuum_workdir
+
+    store = ParquetManifestStore(str(tmp_path), "t")
+    store.append(_df(spark, [("a", 1)]))
+    store.replace_all(_df(spark, [("a", 2)]))
+    os.rename(os.path.join(store.root, "manifest-2.json"),
+              os.path.join(store.root, "manifest.json"))
+    os.remove(os.path.join(store.root, "manifest-1.json"))
+    assert store.version == 2
+    assert [r["val"] for r in store.read_raw(spark).collect()] == [2]
+    assert vacuum_workdir(str(tmp_path)) == {"t": 1}  # the first delta
+    assert "manifest.json" in os.listdir(store.root)  # still the current one
+
+    store.append(_df(spark, [("b", 3)]))
+    assert store.version == 3
+    assert sorted(r["val"] for r in store.read_raw(spark).collect()) == [2, 3]
+    assert vacuum_workdir(str(tmp_path)) == {"t": 0}
+    assert sorted(n for n in os.listdir(store.root) if n != "data") \
+        == ["manifest-3.json"]
+
+
+def test_superstep_commits_never_rename_over_a_file(spark, mini_cfg, mini_web,
+                                                    tmp_path, monkeypatch):
+    """No commit of a superstep (documents, fetch log, frontier merge and
+    compaction, checkpoint) renames onto an existing path."""
+    import dataclasses
+
+    from sparkcrawl.plans.superstep import CrawlRun
+
+    cfg = dataclasses.replace(mini_cfg, compact_every=1, budget_carry=True)
+    run = CrawlRun(spark, str(tmp_path), cfg, mini_web["web"], mini_web["robots"])
+    run.bootstrap(mini_web["seeds"])
+    targets = []
+
+    def guard(real):
+        def move(src, dst, *a, **kw):
+            targets.append((dst, os.path.exists(dst)))
+            return real(src, dst, *a, **kw)
+        return move
+
+    monkeypatch.setattr(os, "rename", guard(os.rename))
+    monkeypatch.setattr(os, "replace", guard(os.replace))
+    run.resume(max_supersteps=2)
+    monkeypatch.undo()
+    assert len(targets) >= 2 * 5, targets
+    assert [dst for dst, existed in targets if existed] == []
 
 
 def _data_dirs(store):
