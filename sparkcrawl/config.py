@@ -48,33 +48,6 @@ class CrawlConfig:
     # --- errors / retry (T4) ---
     max_retries: int = 3
     error_backoff_seconds: int = 3600
-    # --- dedup (F1, UniqueUriFilter analog) ---
-    shard_prefix_depth: int = 2         # hex-prefix shards of the seen-set
-    bloom_capacity_per_shard: int = 1 << 16
-    bloom_fpp: float = 0.01
-    # Off by default: dedup is then the authoritative left_anti join of
-    # the batch-distinct candidates against the frontier keys alone. The
-    # prefilter cannot skip that join (the seen side is read in full
-    # either way); it only adds a pandas-UDF probe lane, a broadcast of
-    # every shard and a driver-side collect + npz rewrite per superstep.
-    # Measured on one 4-vCPU VM over 3 crawl_wide pairs (40 hosts x 20
-    # pages, 64 queues) and 2 crawl_small pairs: the prefilter made the
-    # superstep slower in 4 of the 5 (crawl_wide median superstep 8.8 s
-    # off vs 11.7 s on), with identical crawl output. Opting in is
-    # unchanged (bloom or cuckoo via membership_kind).
-    use_bloom_prefilter: bool = False
-    # membership structure behind the prefilter seam: "bloom" (default;
-    # OR-mergeable, replay-trivially-idempotent) or "cuckoo" (same probe
-    # surface + DELETION, so retired keys' slots recycle at 10^10 keys).
-    membership_kind: str = "bloom"
-    # cuckoo only: retire state=gone URLs (robots-denied, 404, retries
-    # exhausted) from the prefilter at merge time so their slots
-    # recycle. Documented trade-off (plans/superstep.py): a
-    # RE-discovered gone URL is re-admitted once and re-resolved to
-    # gone — idempotent, no duplicate document rows, but it occupies
-    # batch slots, so the flag is off by default to pin the crawl-order
-    # goldens exactly.
-    retire_gone_urls: bool = False
     # content-seen dedup (S6 + exact-dedup composed into the engine):
     # mirrors/aliases fetch identical bodies under different URLs; when
     # on, only the FIRST document per content hash is stored. Off by
@@ -89,12 +62,6 @@ class CrawlConfig:
     # --- virtual clock (T1) ---
     t0: datetime = T0
     tick_seconds: float = 1.0
-    # --- skew (north_rule: salted keys defuse hot-host skew) ---
-    # Unused by the engine: per_queue_topk's partial WindowGroupLimit
-    # already bounds a hot queue to k rows per map task below the queue
-    # exchange, with no salt and no second shuffle. Kept so configs that
-    # set it (bench.py) still construct.
-    skew_salt_buckets: int = 4
     # --- registered domain (C9) ---
     # False = host-based parity mode (pins the goldens; the reference
     # groups by host). True = eTLD+1 via the bundled public-suffix
@@ -157,7 +124,23 @@ class CrawlConfig:
     # --- plugin points (X1-X3: import-path config like the reference's
     #     custom_import; stage = Callable[[DataFrame], DataFrame]) ---
     extractor_pipeline: tuple[str, ...] = ()
-    checkpoint_every: int = 1
+    # --- inert: the frozen benchmark configs still pass these
+    #     (bench.py: skew_salt_buckets, use_bloom_prefilter;
+    #     perfbench/workloads.py: bloom_capacity_per_shard), so they
+    #     construct, but the engine reads none. The scheduler needs no
+    #     salt (per_queue_topk bounds a hot queue map-side) and seen-URL
+    #     dedup is the left_anti join alone (operators/dedup.py), so no
+    #     prefilter can be switched on ---
+    skew_salt_buckets: int = 4
+    use_bloom_prefilter: bool = False
+    bloom_capacity_per_shard: int = 1 << 16
+
+    def __post_init__(self):
+        if self.use_bloom_prefilter:
+            raise ValueError(
+                "use_bloom_prefilter=True is no longer supported: seen-URL "
+                "dedup is the left_anti join against the frontier keys"
+            )
 
 
 DEFAULT_CONFIG = CrawlConfig()

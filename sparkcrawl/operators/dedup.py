@@ -6,18 +6,17 @@ src/spyder/core/{uri_uniq,frontier}.py). Set-oriented re-expression:
 
   1. U2 within-batch distinct with deterministic first-discovery-wins
      (stable order, SURVEY §7 hard-part #1),
-  2. optional bloom PREFILTER (membership.ShardedBloom) that lets
-     definitely-new rows skip the join build,
-  3. J1 authoritative ``left_anti`` join against the seen table.
+  2. F1/J1 ``left_anti`` join against the seen keys — the only seen-set
+     filter. A membership prefilter could not skip it: the join reads
+     every seen key either way.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkcrawl.config import CrawlConfig
-from sparkcrawl.operators.membership import ShardedBloom
 
 
 def batch_distinct(candidates: DataFrame) -> DataFrame:
@@ -44,25 +43,12 @@ def batch_distinct(candidates: DataFrame) -> DataFrame:
 
 
 def filter_unseen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    cfg: CrawlConfig,
-    bloom: "ShardedBloom | object | None" = None,
+    candidates: DataFrame, seen: DataFrame, cfg: CrawlConfig
 ) -> DataFrame:
     """F1+J1: keep candidates whose url_hash is not in the seen set.
 
     ``seen`` is a (url_hash) DataFrame — in practice the frontier's key
-    projection. The anti-join is ALWAYS the authority; the membership
-    prefilter only routes definitely-new rows around it (false positives
-    merely pay the join, never drop a URL). ``bloom`` is any structure
-    with the ``prefilter(df, column)`` surface — ShardedBloom or the
-    deletion-capable ShardedCuckoo (cfg.membership_kind).
+    projection; repeated keys are harmless to an anti-join. ``cfg`` is
+    kept for callers that pass it; no config changes the result.
     """
-    seen_keys = seen.select("url_hash")  # an anti-join ignores repeated keys
-    if bloom is None or not cfg.use_bloom_prefilter:
-        return candidates.join(seen_keys, "url_hash", "left_anti")
-    tagged = bloom.prefilter(candidates, "url_hash")
-    definitely_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    suspects = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    verified_new = suspects.join(seen_keys, "url_hash", "left_anti")
-    return definitely_new.unionByName(verified_new)
+    return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")

@@ -1,4 +1,4 @@
-"""Prefix-sharded bloom membership — the seen-URL set at scale (F1).
+"""Prefix-sharded bloom membership over url_hash digests (F1).
 
 Direct generalization of the reference's ``UniqueUriFilter``
 (src/spyder/core/uri_uniq.py, SURVEY F1): the reference shards its
@@ -6,32 +6,24 @@ seen-set dict by the first ``depth`` hex chars of the URL digest; we
 shard bloom filters by the same prefix so each shard stays small and
 shards can be built/merged independently per partition.
 
-SAFETY INVARIANTS (SURVEY §7 hard-part #2):
-  1. The bloom is only ever a PREFILTER — candidates that miss it are
-     definitely-new and skip the expensive path; candidates that hit it
-     go through the authoritative anti-join. False positives therefore
-     cost a join probe, never a dropped URL.
-  2. The bloom must be a SUPERSET of the committed seen set: the bypass
-     in (1) is only sound if every committed hash is in the bloom. The
-     superstep engine therefore commits bloom updates BEFORE the
-     frontier merge (a kill between leaves harmless extra hashes).
-Both directions are pinned by tests/test_membership.py.
+The crawl engine does not use these filters: seen-URL dedup is the
+``left_anti`` join of operators/dedup.py alone, which reads every seen
+key whether or not a bloom prefilters the candidates.
+:class:`ShardedBloom` and :class:`BloomStore` stay only until a
+benchmark change drops the ``membership.bloom_*`` spans that
+perfbench/trace.py resolves from them; after that only
+:func:`_bloom_params` and :func:`bloom_fpr_curve` (the
+``membership_bloom_fpr`` query) are needed.
 
-Background (public literature, see PAPERS.md): sizing/sharding follows
-the classic bloom formulae; the space-budget tradeoff across a shard
+Background (public literature, see PAPERS.md): sizing follows the
+classic bloom formulae; the space-budget tradeoff across a shard
 *collection* is the subject of "Optimizing Collections of Bloom Filters
-within a Space Budget" (VLDB 2024), and cuckoo/vacuum filters
-(VLDB 2019) are drop-in upgrades behind this same interface if deletion
-or better space efficiency is needed at 10^10 keys —
-:class:`sparkcrawl.operators.cuckoo.ShardedCuckoo` ships that variant
-(same probe surface, plus delete_series).
+within a Space Budget" (VLDB 2024), and "Vacuum Filters" (VLDB 2019)
+add deletion at better space efficiency.
 
 Implementation: numpy bit arrays built per Spark partition via
 ``mapInPandas``, OR-merged on the driver (bounded: shards × m/8 bytes),
-broadcast back for the membership probe. At 10^10 URLs, shard count is
-raised (depth=3 → 4096 shards) so each bloom stays ~MBs; the driver
-merge is a treeAggregate-shaped reduction over ~GBs total, which is the
-same order as Spark's own runtime bloom join build.
+broadcast back for the membership probe.
 """
 
 from __future__ import annotations
@@ -162,19 +154,10 @@ class ShardedBloom:
 
 
 class BloomStore:
-    """Cross-superstep persistence of the seen-set bloom shards (M4).
-
-    The reference keeps its UniqueUriFilter in memory for the process
-    lifetime; our superstep engine is stateless between supersteps, so
-    the shards are persisted (npz blob) and updated INCREMENTALLY with
-    each superstep's newly-discovered hashes — no full seen-set rescan
-    per superstep, which at 10^10 URLs is the difference between O(new)
-    and O(all) work per iteration.
-
-    Commit protocol matches ParquetManifestStore: write-temp-then-rename
-    keyed by superstep; a killed run resumes from the last committed
-    blob. The bloom stays a PREFILTER — resume-safety of the exact
-    seen-set rests on the frontier table, not on this structure.
+    """Bloom shards persisted as one npz blob under ``<root>/bloom`` and
+    updated incrementally with new hashes (O(new) per update, not a
+    full rebuild); write-temp-then-rename commits. No crawl path builds
+    one (see the module docstring).
     """
 
     def __init__(self, root: str, depth: int = 2,
@@ -202,12 +185,9 @@ class BloomStore:
             shards = {p: z[p].copy() for p in z.files}
         return ShardedBloom(shards, self.m, self.k, self.depth)
 
-    def update(self, new_hashes: DataFrame, column: str = "url_hash",
-               channel: str = "update", superstep: int | None = None) -> ShardedBloom:
+    def update(self, new_hashes: DataFrame, column: str = "url_hash") -> ShardedBloom:
         """Fold only the NEW hashes into the persisted shards; atomic
-        commit. ``channel``/``superstep`` are accepted for CuckooStore
-        interface parity and ignored: re-ORing a bloom delta on replay
-        is naturally idempotent, no tag needed."""
+        commit. Re-ORing a delta on replay is idempotent."""
         import os
         import uuid
 

@@ -10,7 +10,7 @@ with a deterministic driver loop; one superstep =
   4 FETCH       synthetic/HTTP fetch                             S4,J4
   5 EXTRACT     links + interleaved spans -> documents append    C3,C5,S6
   6 KEYS        sha1 + queue of the (canonical) discovered links C1,C2
-  7 DEDUP       batch distinct -> [bloom prefilter] -> anti-join U2,F1,J1
+  7 DEDUP       batch distinct -> anti-join vs frontier keys     U2,F1,J1
   8 PRIORITIZE  requeue math + error backoff                     C8,T4
   9 MERGE       frontier' = requeued ∪ denied ∪ new              U1,J3
  10 CHECKPOINT  observed counters + manifest row (no Spark job)  T5,A3
@@ -48,7 +48,6 @@ from sparkcrawl.functions.scope import in_scope
 from sparkcrawl.functions.urlnorm import host_of_canonical_col, with_canonical_host
 from sparkcrawl.operators.dedup import batch_distinct, filter_unseen
 from sparkcrawl.operators.extract import documents_from_fetch, extract_links_and_spans
-from sparkcrawl.operators.membership import BloomStore
 from sparkcrawl.operators.prioritize import apply_outcomes
 from sparkcrawl.operators.robots import crawl_delays, robots_gate
 from sparkcrawl.operators.schedule import select_fetch_batch
@@ -207,22 +206,6 @@ class CrawlRun:
             self.robots_table = RobotsTable(workdir)
         else:
             self.robots_table = None
-        # F1 membership seam: bloom (default) or the deletion-capable
-        # cuckoo store — same probe/update surface, chosen by config.
-        # The attribute keeps its historical name; both stores satisfy
-        # load()/update(), and only the cuckoo one has delete().
-        if cfg.membership_kind == "cuckoo":
-            from sparkcrawl.operators.cuckoo import CuckooStore
-
-            store_cls = CuckooStore
-        else:
-            store_cls = BloomStore
-        self.bloom_store = store_cls(
-            workdir,
-            depth=cfg.shard_prefix_depth,
-            capacity_per_shard=cfg.bloom_capacity_per_shard,
-            fpp=cfg.bloom_fpp,
-        )
         # static robots: the per-host delays are one aggregate over a
         # table that never changes, so they are computed once per run
         self._delays = (
@@ -248,12 +231,6 @@ class CrawlRun:
             priority_col=F.col("priority"),
         )
         rows = batch_distinct(rows)
-        if self.cfg.use_bloom_prefilter:
-            # bloom BEFORE merge: superset invariant (see run_superstep)
-            rows = rows.persist()
-            self.bloom_store.update(
-                rows.select("url_hash"), channel="bootstrap", superstep=0
-            )
         merged, obs_seen = observe(rows)
         self.frontier.merge(merged, superstep=0, tag="bootstrap")
         self.checkpoints.commit(
@@ -266,7 +243,23 @@ class CrawlRun:
                 if self.queue_state is not None else None
             ),
         )
-        rows.unpersist()
+
+    def merge_seeds(self, urls: DataFrame, superstep: int,
+                    priority_col=None) -> DataFrame:
+        """S1/S7 injection into a running crawl (control channel, seed
+        stream): canonicalize raw (url[, priority]) rows, keep one row
+        per url_hash, drop the keys the frontier already holds and
+        merge the rest. Returns the merged rows (lazy). Re-applying it
+        is idempotent: the anti-join drops seeds merged before."""
+        rows = batch_distinct(frontier_rows_from_urls(
+            urls, self.cfg, superstep=superstep, t0=self.cfg.t0,
+            priority_col=priority_col,
+        ))
+        seen = self.frontier.seen_keys(self.spark)
+        if seen is not None:
+            rows = filter_unseen(rows, seen, self.cfg)
+        self.frontier.merge(rows, superstep)
+        return rows
 
     # -- resume state --------------------------------------------------------
     def last_checkpoint(self) -> dict | None:
@@ -518,34 +511,19 @@ class CrawlRun:
             )
             self.link_edges.append(edges, superstep)
 
-        # 7: DEDUP — batch distinct, optional persisted bloom prefilter
-        # (loaded, not rebuilt: O(new) per superstep, M4), authoritative
-        # anti-join against the keys of the persisted start-of-superstep
-        # frontier (the as_of snapshot, one row per url_hash). The merge
-        # is the only reader of both results unless the prefilter is on
-        # (it reads the candidates twice and the new rows once more).
-        # The discovered counter sits on the anti-join's input, not on a
-        # written branch: it reports unless the candidates are empty and
-        # AQE drops the join, and is then counted with an action.
+        # 7: DEDUP — batch distinct, then the left_anti join against the
+        # keys of the persisted start-of-superstep frontier (the as_of
+        # snapshot, one row per url_hash). The merge is the only reader
+        # of both results. The discovered counter sits on the anti-join's
+        # input, not on a written branch: it reports unless the
+        # candidates are empty and AQE drops the join, and is then
+        # counted with an action.
         distinct_cands, obs_discovered = observe(batch_distinct(candidates))
-        seen = frontier.select("url_hash")
-        bloom = None
-        if cfg.use_bloom_prefilter:
-            distinct_cands = distinct_cands.persist()
-            bloom = self.bloom_store.load()
-            if bloom is None:
-                # bloom blob lost but frontier has state: an incremental
-                # restart would violate the superset invariant (stale
-                # bloom re-admits seen URLs) — rebuild once from the
-                # authoritative key set.
-                bloom = self.bloom_store.update(seen, channel="rebuild")
         new_rows = new_frontier_rows(
-            filter_unseen(distinct_cands, seen, cfg, bloom),
+            filter_unseen(distinct_cands, frontier.select("url_hash"), cfg),
             superstep=superstep,
             t0=virtual_time + timedelta(seconds=cfg.tick_seconds),
         )
-        if cfg.use_bloom_prefilter:
-            new_rows = new_rows.persist()
 
         # 8: PRIORITIZE requeues
         requeued = apply_outcomes(fetched_to_outcomes(extracted), virtual_time, cfg)
@@ -580,39 +558,9 @@ class CrawlRun:
                 .select(*[f.name for f in new_rows.schema.fields])
             )
             updates = updates.unionByName(deferred_rows)
-        if cfg.use_bloom_prefilter:
-            # BEFORE the frontier commit — the bloom must always be a
-            # SUPERSET of frontier keys: bloom-unseen rows bypass the
-            # anti-join as definitely-new, so a bloom missing committed
-            # rows would re-admit them (dedup violation). A kill between
-            # bloom update and merge leaves extra hashes in the bloom,
-            # which only costs anti-join probes (tests/test_membership.py).
-            self.bloom_store.update(
-                new_rows.select("url_hash"), channel="superstep", superstep=superstep
-            )
         snapshot_id = self.frontier.merge(
             updates, superstep, tag=f"superstep-{superstep}"
         )
-        if (
-            cfg.use_bloom_prefilter
-            and cfg.retire_gone_urls
-            and hasattr(self.bloom_store, "delete")
-        ):
-            # Cuckoo-only: retire this superstep's gone URLs — robots-
-            # denied AND outcome-gone (404 / retries exhausted, T4) — so
-            # their prefilter slots recycle. AFTER the frontier commit
-            # (a kill in between replays the merge tagged, then deletes
-            # once — CuckooStore's superstep tag makes the delete
-            # idempotent, which matters: replaying a delete could remove
-            # a colliding live key's fingerprint copy). Semantics: a
-            # re-discovered gone URL re-enters the frontier once and is
-            # re-resolved — robots-denied rows are re-gated (never
-            # fetched); a 404 re-fetch re-resolves to gone with no
-            # document rows (extraction_finished short-circuits).
-            gone_keys = denied.select("url_hash").unionByName(
-                requeued.filter(F.col("state") == "gone").select("url_hash")
-            )
-            self.bloom_store.delete(gone_keys, superstep=superstep)
         if self.queue_state is not None:
             # A2 carry bookkeeping: all three inputs are queue-cardinality
             from sparkcrawl.operators.schedule import eligible, update_queue_state
@@ -662,7 +610,7 @@ class CrawlRun:
                 if self.queue_state is not None else None
             ),
         )
-        for df in (frontier, batch, extracted, distinct_cands, new_rows):
+        for df in (frontier, batch, extracted):
             df.unpersist()
         if deferred is not None:
             deferred.unpersist()
@@ -759,20 +707,7 @@ class CrawlRun:
 
             rows = [(s["url"], int(s.get("priority", 1))) for s in seeds]
             df = self.spark.createDataFrame(rows, SEEDS_SCHEMA)
-            frows = frontier_rows_from_urls(
-                df, self.cfg, superstep=superstep, t0=self.cfg.t0,
-                priority_col=F.col("priority"),
-            )
-            frows = batch_distinct(frows)
-            seen = self.frontier.seen_keys(self.spark)
-            if seen is not None:
-                frows = frows.join(seen, "url_hash", "left_anti")
-            if self.cfg.use_bloom_prefilter:
-                frows = frows.persist()
-                self.bloom_store.update(
-                    frows.select("url_hash"), channel="control", superstep=superstep
-                )
-            self.frontier.merge(frows, superstep)
+            self.merge_seeds(df, superstep, priority_col=F.col("priority"))
         os.replace(path, f"{path}.consumed-{superstep}")
         return cmd
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparkcrawl.plans.superstep import CrawlRun, batch_distinct, frontier_rows_from_urls
+from sparkcrawl.plans.superstep import CrawlRun
 
 
 def stream_seeds_into_crawl(
@@ -47,25 +47,11 @@ def stream_seeds_into_crawl(
         # honor the stream's priority column like bootstrap() does;
         # streams without one fall back to priority 1
         has_prio = "priority" in batch_df.columns
-        rows = frontier_rows_from_urls(
+        rows = run.merge_seeds(
             batch_df.select("url", *(["priority"] if has_prio else [])),
-            run.cfg,
-            superstep=superstep,
-            t0=run.cfg.t0,
+            superstep,
             priority_col=F.col("priority") if has_prio else None,
         )
-        rows = batch_distinct(rows)
-        seen = run.frontier.seen_keys(run.spark)
-        if seen is not None:
-            rows = rows.join(seen, "url_hash", "left_anti")
-        if run.cfg.use_bloom_prefilter:
-            # superset invariant (membership.py): the bloom must cover every
-            # committed frontier key BEFORE the merge lands, else a later
-            # link equal to this seed tests definitely-new, bypasses the
-            # anti-join, and clobbers the seed's requeue state.
-            rows = rows.persist()
-            run.bloom_store.update(rows.select("url_hash"))
-        run.frontier.merge(rows, superstep)
         if ckpt is None:
             run.checkpoints.commit(
                 run.spark, 0, run.cfg.t0,

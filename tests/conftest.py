@@ -24,7 +24,6 @@ def mini_cfg():
         heap_size=50,
         tick_seconds=1.0,
         compact_every=3,
-        bloom_capacity_per_shard=1 << 12,
     )
 
 

@@ -4,10 +4,8 @@ table; the corpus-curation operators turn it into a partitioned,
 deduplicated, split training corpus with manifests. This is the
 "a user of the reference could run their whole pipeline here" test."""
 
-import dataclasses
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from sparkcrawl.operators import sampling, textops
@@ -16,30 +14,17 @@ from sparkcrawl.plans.superstep import CrawlRun
 from sparkcrawl.sources.warc import write_wet
 
 
-@pytest.mark.parametrize("membership_kind", ["bloom", "cuckoo"])
-def test_crawl_then_curate_then_export(spark, mini_cfg, mini_web, tmp_path,
-                                       membership_kind):
-    """Both membership modes drive the full pipeline. The cuckoo leg
-    also turns ON gone-URL retirement and resumes mid-crawl: 3 live
-    supersteps, then a fresh CrawlRun over the same workdir finishes
-    superstep 4 — the rebuilt cuckoo store (including any retirements)
-    must carry the resumed crawl through the full curate/export
-    pipeline. (Crawl-order parity across membership modes is pinned
-    separately in test_parity.py.)"""
-    cfg = dataclasses.replace(
-        mini_cfg,
-        use_bloom_prefilter=True,
-        membership_kind=membership_kind,
-        retire_gone_urls=(membership_kind == "cuckoo"),
-    )
+def test_crawl_then_curate_then_export(spark, mini_cfg, mini_web, tmp_path):
+    """The crawl resumes mid-way: 3 live supersteps, then a fresh
+    CrawlRun over the same workdir resumes at superstep 4 from the
+    committed tables alone, and its documents carry through the full
+    curate/export pipeline."""
     wd = str(tmp_path / "crawl")
-    run = CrawlRun(spark, wd, cfg, mini_web["web"], mini_web["robots"])
-    if membership_kind == "cuckoo":
-        run.run(mini_web["seeds"], max_supersteps=3)
-        run = CrawlRun(spark, wd, cfg, mini_web["web"], mini_web["robots"])
-        run.resume(max_supersteps=4)
-    else:
-        run.run(mini_web["seeds"], max_supersteps=4)
+    run = CrawlRun(spark, wd, mini_cfg, mini_web["web"], mini_web["robots"])
+    run.run(mini_web["seeds"], max_supersteps=3)
+    run = CrawlRun(spark, wd, mini_cfg, mini_web["web"], mini_web["robots"])
+    resumed = run.resume(max_supersteps=4)
+    assert resumed[0].superstep == 4
 
     docs_spans = run.documents.read(spark)
     n_crawled = docs_spans.count()

@@ -1,7 +1,9 @@
-"""F1 sharded bloom: no false negatives; prefilter ∘ anti-join ≡ anti-join."""
+"""F1/J1 seen-URL dedup is the anti-join alone; the sharded bloom has
+no false negatives and its FPR curve is sized by _bloom_params."""
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkcrawl.config import CrawlConfig
@@ -22,15 +24,24 @@ def test_no_false_negatives(spark):
     assert tagged.filter(~F.col("maybe_seen")).count() == 0
 
 
-def test_prefilter_equals_authoritative_antijoin(spark):
-    cfg = CrawlConfig(use_bloom_prefilter=True)
+def test_filter_unseen_is_the_anti_join(spark):
     seen = _hashes(spark, 0, 400)
     candidates = _hashes(spark, 300, 400)  # 100 overlap, 300 new
-    bloom = ShardedBloom.build(seen, depth=2, capacity_per_shard=1 << 12, fpp=0.05)
-    with_bloom = {r["url_hash"] for r in filter_unseen(candidates, seen, cfg, bloom).collect()}
-    no_bloom = {r["url_hash"] for r in filter_unseen(candidates, seen, cfg, None).collect()}
-    assert with_bloom == no_bloom
-    assert len(no_bloom) == 300
+    got = {r["url_hash"] for r in filter_unseen(candidates, seen, CrawlConfig()).collect()}
+    want = {r["url_hash"] for r in candidates.collect()} \
+        - {r["url_hash"] for r in seen.collect()}
+    assert got == want
+    assert len(got) == 300
+
+
+def test_bloom_prefilter_cannot_be_switched_on():
+    """Asking for a seen-set prefilter fails loudly instead of being
+    ignored, while the frozen benchmark configs still construct."""
+    with pytest.raises(ValueError, match="use_bloom_prefilter"):
+        CrawlConfig(use_bloom_prefilter=True)
+    cfg = CrawlConfig(use_bloom_prefilter=False, skew_salt_buckets=4,
+                      bloom_capacity_per_shard=1 << 12)
+    assert not cfg.use_bloom_prefilter
 
 
 def test_bloom_store_incremental_equals_rebuild(spark, tmp_path):
@@ -54,41 +65,6 @@ def test_bloom_store_incremental_equals_rebuild(spark, tmp_path):
     loaded = store.load()
     for p in rebuilt.shards:
         assert (loaded.shards[p] == rebuilt.shards[p]).all(), p
-
-
-def test_bloom_superset_is_safe_stale_is_not(spark, tmp_path):
-    """Safety direction of the prefilter: a bloom with EXTRA hashes
-    (ahead of the frontier — the kill-window state under bloom-before-
-    merge ordering) is exact; a bloom MISSING seen hashes re-admits
-    them — which is why the engine commits the bloom BEFORE the
-    frontier merge, keeping bloom ⊇ frontier keys at all times."""
-    from sparkcrawl.config import CrawlConfig
-    from sparkcrawl.operators.membership import BloomStore
-
-    cfg = CrawlConfig(use_bloom_prefilter=True)
-    seen = _hashes(spark, 0, 300)
-    candidates = _hashes(spark, 200, 300)  # 100 overlap
-    exact = {r["url_hash"] for r in filter_unseen(candidates, seen, cfg, None).collect()}
-
-    # AHEAD bloom: knows 200 hashes beyond the seen table -> exact result
-    ahead_store = BloomStore(str(tmp_path / "a"), depth=2,
-                             capacity_per_shard=1 << 12, fpp=0.01)
-    ahead_store.update(_hashes(spark, 0, 500).select("url_hash"))
-    got_ahead = {
-        r["url_hash"]
-        for r in filter_unseen(candidates, seen, cfg, ahead_store.load()).collect()
-    }
-    assert got_ahead == exact
-
-    # STALE bloom (missing seen hashes): violates dedup — documented hazard
-    stale_store = BloomStore(str(tmp_path / "s"), depth=2,
-                             capacity_per_shard=1 << 12, fpp=0.01)
-    stale_store.update(_hashes(spark, 0, 100).select("url_hash"))
-    got_stale = {
-        r["url_hash"]
-        for r in filter_unseen(candidates, seen, cfg, stale_store.load()).collect()
-    }
-    assert got_stale != exact  # pins WHY bloom-before-merge ordering matters
 
 
 def test_prefix_sharding_matches_reference_scheme(spark):

@@ -5,7 +5,7 @@ This is the sandbox re-expression of BASELINE.json's parity gate:
 "matching the reference's crawl ordering and URL-seen set under the same
 seed list + politeness budget". The Spark engine (distributed, windowed,
 anti-joined) must reproduce the sequential record-at-a-time crawler
-EXACTLY — if a shuffle, a window tie-break, or the bloom prefilter
+EXACTLY — if a shuffle, a window tie-break, or the anti-join dedup
 changes any outcome, these tests flap.
 """
 
@@ -188,62 +188,10 @@ def test_golden_requeue_math():
             assert (r["next_date"].replace(tzinfo=timezone.utc) - t).total_seconds() == delta, (status, p_in)
 
 
-# ---- bloom prefilter on: the anti-join stays the authority ----------------
-
-@pytest.fixture(scope="module")
-def engine_bloom(spark, mini_cfg, mini_web, tmp_path_factory):
-    import dataclasses
-
-    cfg = dataclasses.replace(mini_cfg, use_bloom_prefilter=True)
-    run = CrawlRun(
-        spark, str(tmp_path_factory.mktemp("parity-bloom")), cfg,
-        mini_web["web"], mini_web["robots"],
-    )
-    run.stats = run.run(mini_web["seeds"], max_supersteps=N_SUPERSTEPS)
-    return run
-
-
-def test_bloom_prefilter_on_off_identical(engine, engine_bloom, sim, spark):
-    """The prefilter is opt-in and only routes rows around the
-    anti-join: crawl order, seen set and requeue state are identical
-    with it on and off (and both match the sequential reference)."""
-    assert engine_bloom.bloom_store.load() is not None  # the leg really ran it
-    assert engine.bloom_store.load() is None  # the default never builds one
-    assert _engine_fetch_order(engine_bloom, spark) \
-        == _engine_fetch_order(engine, spark) == sim.fetch_log
-    assert engine_stats(engine_bloom.stats) == sim.superstep_stats
-    assert _requeue_state(engine_bloom, spark) == _requeue_state(engine, spark)
-
-
-# ---- cuckoo membership: pure prefilter swap, full parity ------------------
-
-@pytest.fixture(scope="module")
-def engine_cuckoo(spark, mini_cfg, mini_web, tmp_path_factory):
-    import dataclasses
-
-    cfg = dataclasses.replace(
-        mini_cfg, use_bloom_prefilter=True, membership_kind="cuckoo"
-    )
-    run = CrawlRun(
-        spark, str(tmp_path_factory.mktemp("parity-cuckoo")), cfg,
-        mini_web["web"], mini_web["robots"],
-    )
-    run.run(mini_web["seeds"], max_supersteps=N_SUPERSTEPS)
-    return run
-
-
-def test_cuckoo_membership_crawl_order_parity(engine_cuckoo, sim, spark):
-    """membership_kind='cuckoo' (retirement off) is a pure prefilter
-    swap: crawl order must still match the sequential reference."""
-    assert _engine_fetch_order(engine_cuckoo, spark) == sim.fetch_log
-
-
-def test_cuckoo_membership_seen_set_parity(engine_cuckoo, sim, spark):
-    engine_seen = sorted(
-        r["url_hash"]
-        for r in engine_cuckoo.frontier.read(spark).select("url_hash").collect()
-    )
-    assert engine_seen == sim.seen_hashes
+def test_default_crawl_keeps_no_bloom_state(engine):
+    """The anti-join is the only dedup path: a crawl writes no
+    membership prefilter state into its workdir."""
+    assert not os.path.exists(os.path.join(engine.workdir, "bloom"))
 
 
 def test_golden_compression_ratio(spark):

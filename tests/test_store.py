@@ -105,7 +105,9 @@ def _one(spark):
 
 def test_manifest_commit_is_atomic_replace(spark, tmp_path):
     """Each commit renames a fsynced temp file to a NEW version's name,
-    and leaves no temp file behind."""
+    and leaves no temp file behind. History is bounded: once a version
+    lands, the one two before it is removed, so the previous version
+    stays as the fallback."""
     store = ParquetManifestStore(str(tmp_path), "t")
     store.append(_df(spark, [("a", 1)]))
     assert sorted(os.listdir(store.root)) == ["data", "manifest-1.json"]
@@ -116,6 +118,18 @@ def test_manifest_commit_is_atomic_replace(spark, tmp_path):
     assert sorted(os.listdir(store.root)) == [
         "data", "manifest-1.json", "manifest-2.json"]
     assert store.version == 2 and store.num_deltas == 2
+    store.append(_df(spark, [("c", 3)]))
+    assert sorted(os.listdir(store.root)) == [
+        "data", "manifest-2.json", "manifest-3.json"]
+    assert store.version == 3 and store.num_deltas == 3
+    # a shorter manifest (one compacted delta) rewrites a longer file
+    store.replace_all(_df(spark, [("d", 4)]))
+    assert sorted(os.listdir(store.root)) == [
+        "data", "manifest-3.json", "manifest-4.json"]
+    assert store.version == 4 and store.num_deltas == 1
+    with open(os.path.join(store.root, "manifest-4.json"), "rb") as f:
+        assert f.read().endswith(b" ")  # padded to the recycled size
+    assert [r["url_hash"] for r in store.read_raw(spark).collect()] == ["d"]
 
 
 def test_kill_after_temp_write_keeps_previous_version(spark, tmp_path,
