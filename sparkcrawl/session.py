@@ -33,6 +33,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # runtime bloom-filter join prefilters large anti-joins (SURVEY §4.2)
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        # generated-class cache (static, JVM-wide): a bootstrap plus one
+        # superstep compiles ~170 classes, and Spark's default of 100
+        # entries evicted each one before its next use, so every crawl
+        # pass recompiled ~265 classes (CodegenMetrics compile count,
+        # crawl_wide, 4 cores); with room for all of them a warm pass
+        # compiles none
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARKCRAWL_DRIVER_MEM", "16g"))
     )
