@@ -43,6 +43,19 @@ from pyspark.sql import functions as F
 
 
 def main() -> None:
+    from sparkcrawl.operators import release_caches
+
+    args = _parse_args()
+    try:
+        _curate(args)
+    finally:
+        # the near-dup stage caches its candidate pairs and shingle
+        # arrays; release them once the export has run, so a driver
+        # that curates again neither holds them nor reads them back
+        release_caches()
+
+
+def _parse_args() -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="parquet with (doc_id, text, source?)")
     ap.add_argument("--from-warc", action="store_true",
@@ -138,8 +151,10 @@ def main() -> None:
     ap.add_argument("--canaries", metavar="PARQUET",
                     help="(name, canary) sentinel strings for "
                          "--report canaries")
-    args = ap.parse_args()
+    return ap.parse_args()
 
+
+def _curate(args: argparse.Namespace) -> None:
     spark = SparkSession.builder.appName("sparkcrawl-corpus").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,6 +1,6 @@
 """Tracked operator-internal persists, with a release surface.
 
-The pair-search operators (minhash/simhash/ngram/embedding LSH) MUST
+The self-joining pair-search operators (simhash/ngram/embedding LSH) MUST
 persist a subplan: Spark does not reuse the exchange across the two
 aliased sides of a self-join, so without the cache the whole
 signature/shingle computation runs twice (measured 2x on the bench
@@ -11,7 +11,8 @@ nothing can release).
 
 ``tracked_persist()`` registers every such cache; ``release_caches()``
 unpersists them all. Callers invoke it after the consuming action:
-``bench.py`` releases between queries, tests in teardown; the engine's
+``bench.py`` releases between queries, ``scripts/run_corpus.py`` when
+its ``main`` ends, tests in teardown; the engine's
 superstep loop manages its own persists explicitly and does not go
 through this registry.
 """

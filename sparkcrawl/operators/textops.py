@@ -574,21 +574,11 @@ def cross_corpus_contamination(
 MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 
 
-def minhash_signatures(
-    docs: DataFrame, num_perms: int = 8, n: int = 5,
-    text_col: str = "text", id_col: str = "doc_id",
+def _minhash_wide(
+    docs: DataFrame, num_perms: int, n: int, text_col: str, id_col: str,
 ) -> DataFrame:
-    """(id, perm, sig): minhash signature rows, sig = min over shingles
-    of the double-hash family above.
-
-    ONE pass, no row blowup: the per-perm minima are ``num_perms``
-    aggregate columns over the shingle rows (map-side partial agg),
-    unpivoted with ``stack`` afterwards. The previous shape — explode
-    ``num_perms`` copies of every shingle row and md5 each — pushed
-    perms x shingles rows (and that many md5 calls) through the
-    shuffle: 8-16x more rows and hashing for the same result
-    (candidate stage measured 21.7s -> ~6s cold at sf0.1, 16 perms).
-    """
+    """(id, s0 .. s{num_perms-1}): one row per doc, one min-hash column
+    per perm."""
     sh = char_shingles(docs, n, text_col, id_col)
     h1 = (
         F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("bigint")
@@ -605,7 +595,25 @@ def minhash_signatures(
         F.min((h1 + F.lit(p + 1) * h2) % MINHASH_P).alias(f"s{p}")
         for p in range(num_perms)
     ]
-    wide = sh.groupBy("id").agg(*aggs)
+    return sh.groupBy("id").agg(*aggs)
+
+
+def minhash_signatures(
+    docs: DataFrame, num_perms: int = 8, n: int = 5,
+    text_col: str = "text", id_col: str = "doc_id",
+) -> DataFrame:
+    """(id, perm, sig): minhash signature rows, sig = min over shingles
+    of the double-hash family above.
+
+    ONE pass, no row blowup: the per-perm minima are ``num_perms``
+    aggregate columns over the shingle rows (map-side partial agg),
+    unpivoted with ``stack`` afterwards. The previous shape — explode
+    ``num_perms`` copies of every shingle row and md5 each — pushed
+    perms x shingles rows (and that many md5 calls) through the
+    shuffle: 8-16x more rows and hashing for the same result
+    (candidate stage measured 21.7s -> ~6s cold at sf0.1, 16 perms).
+    """
+    wide = _minhash_wide(docs, num_perms, n, text_col, id_col)
     pairs = ", ".join(f"{p}, s{p}" for p in range(num_perms))
     return wide.selectExpr("id", f"stack({num_perms}, {pairs}) AS (perm, sig)")
 
@@ -617,9 +625,15 @@ def minhash_lsh_pairs(
     rows_per_band: int = 1,
 ) -> DataFrame:
     """Candidate near-dup pairs: docs agreeing on ≥1 LSH band.
-    Equi-join on the band key — at scale this is the shuffle-friendly
-    LSH bucket join; no all-pairs blowup.
     Returns (id_a, id_b, n_bands) with id_a < id_b.
+
+    Pairs are built INSIDE each band bucket: one hash aggregation on
+    (band, key) collects the bucket's sorted ids, and every a<b pair of
+    that list is emitted in place; a second aggregation counts the
+    buckets each pair shares. No self-join, so the signature table is
+    read once and nothing is cached. Work is the sum of C(|bucket|, 2)
+    over buckets, the same pair volume an equi-join on the band key
+    produces; never all-pairs.
 
     ``rows_per_band`` is the classic AND-OR knob: r min-hashes are
     concatenated per band (AND — all r must agree for a band match),
@@ -629,48 +643,43 @@ def minhash_lsh_pairs(
     scale the r>1 setting is what keeps the verify stage affordable.
 
     ``max_bucket_size`` drops band buckets larger than the cap before
-    the self-join — standard LSH practice: a bucket shared by thousands
-    of docs is a stop-shingle, not a near-dup signal, and its C(n,2)
-    pair blowup is the single biggest skew hazard of this operator at
-    corpus scale.
+    any pair is emitted — standard LSH practice: a bucket shared by
+    thousands of docs is a stop-shingle, not a near-dup signal, and its
+    C(n,2) pair blowup is the single biggest skew hazard of this
+    operator at corpus scale.
     """
-    # persist: the self-join references sig TWICE and Spark does not
-    # reuse the exchange across the aliased sides — without the cache
-    # the whole shingle->min-hash aggregation runs twice (measured 2x
-    # on the bench query)
-    sig = tracked_persist(minhash_signatures(docs, num_perms, n, text_col, id_col))
+    wide = _minhash_wide(docs, num_perms, n, text_col, id_col)
     if rows_per_band > 1:
-        # AND step: one row per (id, band) whose key concatenates the
-        # band's r signatures in perm order (hash agg, no window)
-        sig = (
-            sig.withColumn("band", F.floor(F.col("perm") / rows_per_band))
-            .groupBy("id", "band")
-            .agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("perm", "sig"))),
-                        lambda s: s["sig"].cast("string"),
-                    ),
-                    "|",
-                ).alias("sig")
-            )
-            .withColumnRenamed("band", "perm")
-        )
-    if max_bucket_size is not None:
-        ok = (
-            sig.groupBy("perm", "sig")
-            .agg(F.count("*").alias("_bn"))
-            .filter(F.col("_bn") <= max_bucket_size)
-            .drop("_bn")
-        )
-        sig = sig.join(ok, ["perm", "sig"])
-    return (
-        sig.alias("a")
-        .join(sig.alias("b"), on=["perm", "sig"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("n_bands"))
+        # AND step: the band key joins its r signatures in perm order,
+        # read straight off the wide row (no per-band regroup)
+        keys = [
+            F.concat_ws("|", *[
+                F.col(f"s{p}").cast("string")
+                for p in range(lo, min(lo + rows_per_band, num_perms))
+            ])
+            for lo in range(0, num_perms, rows_per_band)
+        ]
+    else:
+        keys = [F.col(f"s{p}") for p in range(num_perms)]
+    sig = wide.select("id", F.inline(F.array(*[
+        F.struct(F.lit(b).alias("perm"), k.alias("sig"))
+        for b, k in enumerate(keys)
+    ])))
+    buckets = sig.groupBy("perm", "sig").agg(
+        F.array_sort(F.collect_list("id")).alias("_ids"),
+        F.count("*").alias("_bn"),
     )
+    if max_bucket_size is not None:
+        buckets = buckets.filter(F.col("_bn") <= max_bucket_size)
+    # ids are distinct within a bucket (one signature row per id and
+    # band), so the sorted list yields each a<b pair exactly once
+    pairs = buckets.filter(F.size("_ids") > 1).select(F.inline(F.flatten(
+        F.transform("_ids", lambda a, i: F.transform(
+            F.slice("_ids", i + 2, F.size("_ids")),
+            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
+        ))
+    )))
+    return pairs.groupBy("id_a", "id_b").agg(F.count("*").alias("n_bands"))
 
 
 def dedup_against_index(
@@ -743,31 +752,20 @@ def verify_jaccard_pairs(
     O(candidates × shingles), never all-pairs. Returns
     (id_a, id_b, jaccard) for pairs meeting the threshold.
 
-    Pruning the shingle side down to candidate documents is
-    deliberately DELEGATED to Catalyst's runtime bloom-filter join
-    pruning (`spark.sql.optimizer.runtime.bloomFilter.enabled`, on by
-    default: the pair side builds a bloom over id_a/id_b that is
-    pushed into the shingle side's scan when that scan exceeds the
-    application-side threshold — exactly the big-corpus case). A
-    hand-rolled semi-join against the candidate id set was built and
-    A/B-measured first: at bench scale it cost ~2x (two extra
-    exchanges + a cache barrier serializing the three shingle
-    consumers) and at 100 TB it duplicates what the runtime filter
-    already does declaratively. Plan shape over plumbing.
+    Documents are pruned to the candidate ids BEFORE any shingle is
+    built: a semi-join against the distinct ids of the pair list keeps
+    only docs that can survive the pair joins, and only those are
+    shingled. Building the arrays first would shingle the whole corpus
+    and then throw most of it away.
     """
     # persisted: the pair list is read three times below (two join legs
     # + the candidate-id prune) and re-deriving it replays the whole
     # LSH candidate stage.
     pairs = tracked_persist(candidates.select("id_a", "id_b"))
-    # Prune the shingle-ARRAY table to CANDIDATE documents before any
-    # join: only ids appearing in a candidate pair can survive the
-    # inner joins below, so the semi-join changes nothing about the
-    # result while shrinking the shuffled volume from |corpus| to
-    # |candidate docs| (guide §3.2). Intersections are then computed
-    # per pair with array_intersect over the two docs' DISTINCT
-    # shingle arrays: the previous exploded-row form shuffled
-    # |pairs| x |shingles per doc| rows (tens of millions) through a
-    # (id, shingle)-keyed join to count what is a per-pair set
+    # Intersections are computed per pair with array_intersect over the
+    # two docs' DISTINCT shingle arrays: the previous exploded-row form
+    # shuffled |pairs| x |shingles per doc| rows (tens of millions)
+    # through a (id, shingle)-keyed join to count what is a per-pair set
     # intersection — the arrays move once per pair instead (§2.3:
     # shuffle keys and metadata, not exploded payloads). Zero-shingle
     # docs are dropped exactly as the exploded form dropped them.
@@ -783,14 +781,15 @@ def verify_jaccard_pairs(
         )
     )
     arrs = tracked_persist(
-        docs.select(
-            F.col(id_col).alias("id"),
+        docs.select(F.col(id_col).alias("id"), text_col)
+        .join(cand_ids, "id", "semi")
+        .select(
+            "id",
             F.explode(F.array(
                 F.filter(arr, lambda x: F.length(x) == n)
             )).alias("sh_arr"),
         )
         .filter(F.size("sh_arr") > 0)
-        .join(cand_ids, "id", "semi")
     )
     inter = (
         pairs.join(
@@ -868,8 +867,8 @@ def simhash_near_pairs(docs: DataFrame, bits: int = 32, max_hamming: int = 3,
     """
     n_chunks = max_hamming + 1
     width = -(-bits // n_chunks)  # ceil
-    # persist: the banded self-join below reads this twice (see
-    # minhash_lsh_pairs)
+    # persist: the banded self-join below reads this twice, and Spark
+    # does not reuse the exchange across the aliased sides
     sh = tracked_persist(simhash(docs, bits, text_col, id_col))
     chunks = sh.select(
         "id", "simhash",
@@ -1340,6 +1339,36 @@ def connected_components(
     return lbl
 
 
+def _near_dup_components(
+    docs: DataFrame, num_perms: int, n: int, threshold: float,
+    text_col: str, id_col: str, max_bucket_size: int | None,
+    rows_per_band: int,
+) -> tuple[DataFrame, DataFrame]:
+    """(spread docs, components): the LSH -> exact verify -> connected
+    components chain shared by hard and soft near-dup dedup.
+
+    ``docs`` is first hash-spread over the session width and
+    checkpointed, and every later stage reads that copy: MinHash,
+    verify and the caller's join back. A gated corpus is a deep lazy
+    plan, and without the checkpoint each of those three consumers
+    re-ran it, each time paying its driver-side analysis again. A
+    corpus under AQE's 1 MB ``minPartitionSize`` also coalesces to one
+    partition, which put all shingling and hashing on one core; AQE
+    does not coalesce an explicit partition count. The key is the doc
+    id, so a task retry places rows identically.
+    """
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    docs = docs.repartition(par, id_col).localCheckpoint(eager=True)
+    pairs = minhash_lsh_pairs(
+        docs, num_perms=num_perms, n=n, text_col=text_col, id_col=id_col,
+        max_bucket_size=max_bucket_size, rows_per_band=rows_per_band,
+    )
+    verified = verify_jaccard_pairs(
+        pairs, docs, n=n, threshold=threshold, text_col=text_col, id_col=id_col
+    )
+    return docs, connected_components(verified)
+
+
 def dedup_corpus_canonical(
     docs: DataFrame,
     num_perms: int = 16,
@@ -1364,14 +1393,10 @@ def dedup_corpus_canonical(
     is the capped/banded/two-phase shape documented on the underlying
     operators; nothing here is all-pairs.
     """
-    pairs = minhash_lsh_pairs(
-        docs, num_perms=num_perms, n=n, text_col=text_col, id_col=id_col,
-        max_bucket_size=max_bucket_size, rows_per_band=rows_per_band,
+    docs, comp = _near_dup_components(
+        docs, num_perms, n, threshold, text_col, id_col,
+        max_bucket_size, rows_per_band,
     )
-    verified = verify_jaccard_pairs(
-        pairs, docs, n=n, threshold=threshold, text_col=text_col, id_col=id_col
-    )
-    comp = connected_components(verified)
     losers = comp.filter(F.col("id") != F.col("comp")).select(
         F.col("id").alias(id_col)
     )
@@ -1408,14 +1433,10 @@ def soft_dedup_weights(
     final left join against ``docs`` defaults singletons to size 1,
     weight 1 — no extra shuffle of the corpus beyond the pipeline's own.
     """
-    pairs = minhash_lsh_pairs(
-        docs, num_perms=num_perms, n=n, text_col=text_col, id_col=id_col,
-        max_bucket_size=max_bucket_size, rows_per_band=rows_per_band,
+    docs, comp = _near_dup_components(
+        docs, num_perms, n, threshold, text_col, id_col,
+        max_bucket_size, rows_per_band,
     )
-    verified = verify_jaccard_pairs(
-        pairs, docs, n=n, threshold=threshold, text_col=text_col, id_col=id_col
-    )
-    comp = connected_components(verified)
     sizes = comp.groupBy("comp").agg(F.count("*").alias("cluster_size"))
     member = comp.join(sizes, "comp").select(
         F.col("id").alias(id_col), "cluster_size")

@@ -41,7 +41,8 @@ def get_spark(
         # compiles none
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARKCRAWL_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARKCRAWL_DRIVER_MEM") or default_driver_memory())
     )
     # local-mode shuffle goes through spark.local.dir on the driver host;
     # route it through tmpfs when available so scaling measurements see
@@ -56,6 +57,17 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def default_driver_memory() -> str:
+    """16g, or half the host's physical memory when that is less: a
+    local-mode driver heap sized past the host lets one run's JVM grow
+    until the kernel kills it."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{min(16 << 10, ram // 2 >> 20)}m"
 
 
 def _parallelism_of(master: str) -> int:

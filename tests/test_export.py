@@ -158,3 +158,37 @@ def test_run_corpus_cli_reports(spark, tmp_path, capsys):
         _run(str(tmp_path / "o2"), "--report", "nope")
     with pytest.raises(SystemExit):
         _run(str(tmp_path / "o3"), "--report", "canaries")
+
+
+def test_run_corpus_releases_its_caches(spark, tmp_path, capsys):
+    """run_corpus.main leaves no cached plan behind: the near-dup
+    stage's persisted candidate pairs and shingle arrays are released
+    when the pass ends, so a driver that curates again recomputes them
+    rather than timing (or holding) the last pass's blocks."""
+    import importlib.util
+    import sys
+
+    from sparkcrawl.operators import release_caches
+
+    spec = importlib.util.spec_from_file_location(
+        "run_corpus",
+        os.path.join(os.path.dirname(__file__), os.pardir,
+                     "scripts", "run_corpus.py"),
+    )
+    run_corpus = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run_corpus)
+
+    release_caches()
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    old = sys.argv
+    sys.argv = ["run_corpus.py", "--input", f"{SF}/documents.parquet",
+                "--output", str(tmp_path / "out"), "--near-dup",
+                "--dedup-paragraphs"]
+    try:
+        run_corpus.main()
+    finally:
+        sys.argv = old
+    capsys.readouterr()
+    assert cache.isEmpty()

@@ -389,6 +389,55 @@ def test_minhash_signatures_single_pass(spark):
     assert p.count("Generate explode") == 1, p  # shingles only, not perms
 
 
+@pytest.mark.parametrize("rows_per_band,max_bucket_size",
+                         [(1, None), (4, 100)])
+def test_minhash_lsh_pairs_built_inside_buckets(spark, rows_per_band,
+                                                max_bucket_size):
+    """LSH pairs come from each (band, key) bucket's own id list: no
+    join keyed on the band key, neither a self-join nor a bucket-cap
+    join back."""
+    from sparkcrawl.operators import textops
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat"), (2, "the cat sat on the mat")],
+        ["doc_id", "text"])
+    p = plan_of(textops.minhash_lsh_pairs(
+        docs, num_perms=8, rows_per_band=rows_per_band,
+        max_bucket_size=max_bucket_size), "simple")
+    keyed = [ln for ln in p.splitlines()
+             if "Join" in ln and re.search(r"\bperm#\d+", ln)
+             and re.search(r"\bsig#\d+", ln)]
+    assert not keyed, p
+
+
+def _depth(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def test_verify_prunes_docs_before_shingling(spark):
+    """verify_jaccard_pairs semi-joins the documents to the candidate
+    ids first and shingles only the survivors: the shingle-array
+    Generate sits above every LeftSemi join, never inside its subtree."""
+    from sparkcrawl.operators import textops
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat"), (2, "the cat sat on the mat"),
+         (3, "a dog ran far away")], ["doc_id", "text"])
+    cand = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
+    lines = plan_of(textops.verify_jaccard_pairs(cand, docs, n=5),
+                    "simple").splitlines()
+    p = "\n".join(lines)
+    semis = [i for i, ln in enumerate(lines) if "LeftSemi" in ln]
+    assert semis and any("sh_arr" in ln and "Generate" in ln
+                         for ln in lines), p
+    for i in semis:
+        d = _depth(lines[i])
+        for ln in lines[i + 1:]:
+            if _depth(ln) <= d:
+                break
+            assert not ("Generate" in ln and "sh_arr" in ln), p
+
+
 def test_decontamination_no_cartesian(spark, queries):
     """Bipartite shingle equi-join must never degrade to a cross
     product (the whole point vs all-pairs comparison)."""

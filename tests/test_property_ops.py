@@ -279,3 +279,83 @@ def test_frontier_keys_map_each_host_to_one_queue(spark, host_paths):
         assert {r["host"] for r in per_host} == {h for h, _ in host_paths}
         assert all(r["q"] == 1 and r["d"] == 1 for r in per_host), per_host
         assert all(0 <= r["queue"] < 7 for r in per_host)
+
+
+def _self_join_lsh_pairs(docs, num_perms, n, max_bucket_size, rows_per_band):
+    """Reference: the band-key self-join form of minhash_lsh_pairs
+    (regroup per (id, band), cap by a join back, then join the
+    signature table with itself on (perm, sig))."""
+    from sparkcrawl.operators.textops import minhash_signatures
+
+    sig = minhash_signatures(docs, num_perms, n)
+    if rows_per_band > 1:
+        sig = (
+            sig.withColumn("band", F.floor(F.col("perm") / rows_per_band))
+            .groupBy("id", "band")
+            .agg(
+                F.array_join(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("perm", "sig"))),
+                        lambda s: s["sig"].cast("string"),
+                    ),
+                    "|",
+                ).alias("sig")
+            )
+            .withColumnRenamed("band", "perm")
+        )
+    if max_bucket_size is not None:
+        ok = (
+            sig.groupBy("perm", "sig")
+            .agg(F.count("*").alias("_bn"))
+            .filter(F.col("_bn") <= max_bucket_size)
+            .drop("_bn")
+        )
+        sig = sig.join(ok, ["perm", "sig"])
+    return (
+        sig.alias("a")
+        .join(sig.alias("b"), on=["perm", "sig"])
+        .filter(F.col("a.id") < F.col("b.id"))
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count("*").alias("n_bands"))
+    )
+
+
+@settings(**SETTINGS)
+@given(st.lists(
+    st.tuples(st.integers(0, 7), st.text(alphabet="ab ", max_size=14)),
+    min_size=1, max_size=14,
+))
+def test_bucket_local_lsh_pairs_match_self_join(spark, rows):
+    """minhash_lsh_pairs (pairs emitted inside each band bucket) returns
+    exactly the (id_a, id_b, n_bands) rows of the self-join form, for
+    rows_per_band in {1, 4}, with and without a bucket cap, on inputs
+    with repeated doc ids (a repeated id is one signature over the
+    union of its rows' shingles). A tiny alphabet makes buckets
+    collide often, so capped and multi-band pairs both occur. All
+    eight results come back in one collect."""
+    from sparkcrawl.operators.textops import minhash_lsh_pairs
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    parts = []
+    for r in (1, 4):
+        for cap in (None, 2):
+            for form, fn in (("bucket", minhash_lsh_pairs),
+                             ("self_join", _self_join_lsh_pairs)):
+                out = fn(docs, num_perms=8, n=3, max_bucket_size=cap,
+                         rows_per_band=r)
+                parts.append(out.select(
+                    F.lit(f"{r}/{cap}").alias("cfg"), F.lit(form).alias("form"),
+                    "id_a", "id_b", "n_bands"))
+    union = parts[0]
+    for p in parts[1:]:
+        union = union.unionByName(p)
+    got = {}
+    for row in union.collect():
+        got.setdefault((row["cfg"], row["form"]), []).append(
+            (row["id_a"], row["id_b"], row["n_bands"]))
+    for r in (1, 4):
+        for cap in (None, 2):
+            cfg = f"{r}/{cap}"
+            bucket = sorted(got.get((cfg, "bucket"), []))
+            assert bucket == sorted(got.get((cfg, "self_join"), [])), cfg
+            assert len(set((a, b) for a, b, _ in bucket)) == len(bucket)
