@@ -1481,31 +1481,33 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             default_frac=0.1,
         )
 
+    def _event_host_edges(spark, sf):
+        """The synthetic host graph of the graph_* queries:
+        user_id % 200 -> event_id % 200 per event (repeats and
+        self-loops included; the operators take the distinct edges)."""
+        ev = _read(spark, sf, "events")
+        return ev.select(
+            (F.col("user_id") % 200).alias("src"),
+            (F.col("event_id") % 200).alias("dst"),
+        )
+
     def graph_host_rank(spark, sf):
         """PageRank over a deterministic host graph synthesized from
         events (user_id%200 -> event_id%200): the crawl scheduler's
         link-popularity priority signal. 10 power iterations; DuckDB
         re-derives every iterate with a recursive CTE (zero-weight
         self-edges keep all nodes in the working table each round)."""
-        ev = _read(spark, sf, "events")
-        edges = ev.select(
-            (F.col("user_id") % 200).alias("src"),
-            (F.col("event_id") % 200).alias("dst"),
-        )
-        return graph.pagerank(edges, damping=0.85, iters=10)
+        return graph.pagerank(_event_host_edges(spark, sf), damping=0.85,
+                              iters=10)
 
     def graph_trustrank(spark, sf):
         """TrustRank over the same synthetic host graph: teleport mass
         confined to a vetted seed set (hosts ≡ 0 mod 17), so trust
         decays with link distance from the seeds — the demotion-side
         spam defense next to graph_link_spam's structural detector."""
-        ev = _read(spark, sf, "events")
-        edges = ev.select(
-            (F.col("user_id") % 200).alias("src"),
-            (F.col("event_id") % 200).alias("dst"),
-        )
         seeds = spark.range(0, 200, 17).select(F.col("id"))
-        return graph.trustrank(edges, seeds, damping=0.85, iters=10)
+        return graph.trustrank(_event_host_edges(spark, sf), seeds,
+                               damping=0.85, iters=10)
 
     def graph_hits(spark, sf):
         """HITS hubs/authorities over the same synthetic host graph:
@@ -1513,25 +1515,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         (a good hub's link list discovers the most new authorities per
         fetch). Five L1-normalized half-step iterations; DuckDB unrolls
         the identical half-steps CTE by CTE."""
-        ev = _read(spark, sf, "events")
-        edges = ev.select(
-            (F.col("user_id") % 200).alias("src"),
-            (F.col("event_id") % 200).alias("dst"),
-        )
-        return graph.hits(edges, iters=5)
+        return graph.hits(_event_host_edges(spark, sf), iters=5)
 
     def graph_spam_mass(spark, sf):
         """Relative spam mass: the share of each host's PageRank NOT
         attributable to the vetted seed core (hosts ≡ 0 mod 17).
         Rank and trust iterate JOINTLY — one out-edge join + one agg
         per round carries both measures."""
-        ev = _read(spark, sf, "events")
-        edges = ev.select(
-            (F.col("user_id") % 200).alias("src"),
-            (F.col("event_id") % 200).alias("dst"),
-        )
         seeds = spark.range(0, 200, 17).select(F.col("id"))
-        return graph.spam_mass(edges, seeds, damping=0.85, iters=10)
+        return graph.spam_mass(_event_host_edges(spark, sf), seeds,
+                               damping=0.85, iters=10)
 
     def graph_rank_budget(spark, sf):
         """Rank-weighted crawl budget: Hamilton-apportion a 10k-fetch
@@ -1540,12 +1533,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         quota summing to EXACTLY the budget)."""
         from sparkcrawl.operators.schedule import allocate_budgets
 
-        ev = _read(spark, sf, "events")
-        edges = ev.select(
-            (F.col("user_id") % 200).alias("src"),
-            (F.col("event_id") % 200).alias("dst"),
-        )
-        ranks = graph.pagerank(edges, damping=0.85, iters=10)
+        ranks = graph.pagerank(_event_host_edges(spark, sf), damping=0.85,
+                               iters=10)
         return allocate_budgets(ranks, 10000, key_col="id", weight_col="rank")
 
     def graph_opic(spark, sf):
@@ -1555,33 +1544,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         Synchronous-rounds variant, 10 rounds; the DuckDB twin carries
         (cash, hist) through a recursive CTE using zero-weight self
         edges to ferry each node's own history forward."""
-        ev = _read(spark, sf, "events")
-        edges = ev.select(
-            (F.col("user_id") % 200).alias("src"),
-            (F.col("event_id") % 200).alias("dst"),
-        )
-        return graph.opic(edges, iters=10)
+        return graph.opic(_event_host_edges(spark, sf), iters=10)
 
     def graph_cocitation(spark, sf):
         """Co-citation related-host pairs (≥2 common citing sources,
         per-source fanout capped at 50 smallest targets so a mega-hub
         never materializes its full pair square)."""
-        ev = _read(spark, sf, "events")
-        edges = ev.select(
-            (F.col("user_id") % 200).alias("src"),
-            (F.col("event_id") % 200).alias("dst"),
-        )
-        return graph.cocitation_pairs(edges, min_common=2, max_out=50)
+        return graph.cocitation_pairs(_event_host_edges(spark, sf),
+                                      min_common=2, max_out=50)
 
     def graph_coupling(spark, sf):
         """Bibliographic coupling (hosts sharing ≥2 OUT-link targets) =
         co-citation on the transposed edge list — same operator, same
         cap, reversed roles."""
-        ev = _read(spark, sf, "events")
-        rev = ev.select(
-            (F.col("event_id") % 200).alias("src"),
-            (F.col("user_id") % 200).alias("dst"),
-        )
+        rev = _event_host_edges(spark, sf).select(
+            F.col("dst").alias("src"), F.col("src").alias("dst"))
         return graph.cocitation_pairs(rev, min_common=2, max_out=50)
 
     def multimodal_image_near_dup(spark, sf):
@@ -2883,6 +2860,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "leaked_groups",
         )
 
+    def _out_degree2_edges(spark, sf):
+        """The out-degree-2 graph of crawl_hop_depth and
+        crawl_seed_attribution: every node n = user_id % 128 links to
+        3n+1 mod 128 and to n+17 mod 128."""
+        ev = _fan(_read(spark, sf, "events"), "event_id")
+        nodes = ev.select((F.col("user_id") % 128).alias("n")).distinct()
+        return nodes.select(
+            F.col("n").alias("src"), ((F.col("n") * 3 + 1) % 128).alias("dst")
+        ).unionByName(
+            nodes.select(
+                F.col("n").alias("src"), ((F.col("n") + 17) % 128).alias("dst")
+            )
+        )
+
     def crawl_hop_depth(spark, sf):
         """Seed-distance BFS (graph.hop_depth): minimal hop count from
         seed node 0 over a deterministic out-degree-2 graph on
@@ -2891,17 +2882,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         prioritizing, trap-depth capping). One equi-join superstep per
         level with early stop; DuckDB mirrors with a depth-bounded
         recursive CTE + min(depth)."""
-        ev = _fan(_read(spark, sf, "events"), "event_id")
-        nodes = ev.select((F.col("user_id") % 128).alias("n")).distinct()
-        edges = nodes.select(
-            F.col("n").alias("src"), ((F.col("n") * 3 + 1) % 128).alias("dst")
-        ).unionByName(
-            nodes.select(
-                F.col("n").alias("src"), ((F.col("n") + 17) % 128).alias("dst")
-            )
-        )
         seeds = spark.createDataFrame([(0,)], "id: bigint")
-        return graph.hop_depth(edges, seeds, max_depth=12)
+        return graph.hop_depth(_out_degree2_edges(spark, sf), seeds,
+                               max_depth=12)
 
     def crawl_seed_attribution(spark, sf):
         """Crawl lineage (graph.seed_attribution): every reachable node
@@ -2911,17 +2894,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the DuckDB twin computes the global argmin over the raw
         depth-bounded path set, pinning the level-wise min-propagation
         to the declarative definition."""
-        ev = _fan(_read(spark, sf, "events"), "event_id")
-        nodes = ev.select((F.col("user_id") % 128).alias("n")).distinct()
-        edges = nodes.select(
-            F.col("n").alias("src"), ((F.col("n") * 3 + 1) % 128).alias("dst")
-        ).unionByName(
-            nodes.select(
-                F.col("n").alias("src"), ((F.col("n") + 17) % 128).alias("dst")
-            )
-        )
         seeds = spark.createDataFrame([(0,), (5,), (11,)], "id: bigint")
-        return graph.seed_attribution(edges, seeds, max_depth=12)
+        return graph.seed_attribution(_out_degree2_edges(spark, sf), seeds,
+                                      max_depth=12)
 
     def corpus_token_budget(spark, sf):
         """Greedy quality-first selection under a global token budget

@@ -1,13 +1,21 @@
-"""Link-graph operators: PageRank for host/URL prioritization.
+"""Link-graph operators over a crawl's (src, dst) edge stream.
 
-A crawl scheduler's classic priority signal (alongside C8's
-outcome-based requeue math): hosts that many other hosts link to get
-fetched first. Re-expressed Spark-first as power iteration — each
-round is one equi-join + one hash aggregation + one broadcast-sized
-node-table join, with ``localCheckpoint`` truncating the per-round
-lineage exactly like :func:`sparkcrawl.operators.textops.connected_components`.
+Every iterative operator here starts from the same edge list and
+reuses one of two loops:
 
-Semantics (simplified PageRank, the common fixed-iteration form):
+- :func:`_edge_list` — the distinct directed edges with self-loops
+  dropped; :func:`_nodes` — every id that appears as src or dst.
+- :func:`_propagate` — power iteration with teleport, the loop of
+  :func:`pagerank`, :func:`trustrank` and :func:`spam_mass`. Each
+  round is one equi-join of the state with the 1/out-degree weighted
+  out-edges, one hash aggregation, one left join back onto the node
+  set (and the broadcast seed table), and a ``localCheckpoint``
+  truncating the lineage exactly like
+  :func:`sparkcrawl.operators.textops.connected_components`.
+- :func:`seed_attribution` — level-at-a-time BFS from a seed set;
+  :func:`hop_depth` is the same BFS without the seed label.
+
+PageRank semantics (the common fixed-iteration form):
 
     rank_0(x)   = 1 / N
     rank_i+1(x) = (1-d)/N + d * sum over in-neighbors y of
@@ -25,6 +33,106 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
+def _edge_list(edges: DataFrame, src: str, dst: str,
+               s: str = "src", d: str = "dst") -> DataFrame:
+    """The distinct directed edges of ``edges`` as columns (s, d),
+    self-loops dropped."""
+    return (
+        edges.select(F.col(src).alias(s), F.col(dst).alias(d))
+        .filter(F.col(s) != F.col(d))
+        .distinct()
+    )
+
+
+def _nodes(e: DataFrame) -> DataFrame:
+    """(id) — every node of an :func:`_edge_list` (src or dst)."""
+    return (
+        e.select(F.col("src").alias("id"))
+        .unionByName(e.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+
+
+def _propagate(
+    e: DataFrame,
+    damping: float,
+    iters: int,
+    rank: bool = True,
+    seeds: DataFrame | None = None,
+    seed_col: str = "id",
+) -> tuple[DataFrame, int | None, int | None]:
+    """Power iteration over an :func:`_edge_list`, shared by
+    :func:`pagerank`, :func:`trustrank` and :func:`spam_mass`.
+
+    The state table carries ``rank`` (teleport spread over all N
+    nodes) when ``rank`` is set and ``trust`` (teleport spread over the
+    seeds that appear in the graph) when ``seeds`` is given. PageRank
+    is linear in its teleport vector, so both columns ride the same
+    round: one out-edge join and one hash aggregation for all of them.
+    The seed table is tiny and broadcast.
+
+    Returns ``(state, n, n_seeds)``; a count is None when its column is
+    not carried, so only the scalars a caller needs are ever collected.
+    Raises ``ValueError`` when no seed appears in the graph.
+    """
+    e = e.persist()
+    nodes = _nodes(e).persist()
+    held = [e, nodes]
+    init, teleport = {}, {}
+    n = n_seeds = seed_ids = None
+    try:
+        if rank:
+            n = nodes.count()
+            init["rank"] = F.lit(1.0 / n)
+            teleport["rank"] = F.lit((1.0 - damping) / n)
+        if seeds is not None:
+            seed_ids = F.broadcast(
+                seeds.select(F.col(seed_col).alias("id")).distinct()
+                .join(nodes, "id", "semi")
+                .withColumn("_seed", F.lit(1.0))
+            ).persist()
+            held.append(seed_ids)
+            n_seeds = seed_ids.count()
+            if n_seeds == 0:
+                raise ValueError("no seed appears in the graph")
+            init["trust"] = F.col("_base")
+            teleport["trust"] = F.lit(1.0 - damping) * F.col("_base")
+        deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
+        # weighted out-edges: each neighbor receives value/out_deg
+        out = e.join(deg, "src").select(
+            F.col("src").alias("id"), "dst",
+            (F.lit(1.0) / F.col("out_deg")).alias("w"),
+        ).persist()
+        held.append(out)
+        out.count()
+
+        def settle(df, values):
+            if seed_ids is not None:
+                df = df.join(seed_ids, "id", "left").withColumn(
+                    "_base", F.coalesce(F.col("_seed"), F.lit(0.0)) / n_seeds
+                )
+            return df.select(
+                "id", *[v.alias(c) for c, v in values.items()]
+            ).localCheckpoint(eager=True)
+
+        state = settle(nodes, init)
+        for _ in range(iters):
+            contrib = (
+                state.join(out, "id")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(*[F.sum(F.col(c) * F.col("w")).alias("_in_" + c)
+                       for c in init])
+            )
+            state = settle(nodes.join(contrib, "id", "left"), {
+                c: t + F.lit(damping) * F.coalesce("_in_" + c, F.lit(0.0))
+                for c, t in teleport.items()
+            })
+        return state, n, n_seeds
+    finally:
+        for df in held:
+            df.unpersist()
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
@@ -35,46 +143,8 @@ def pagerank(
     """(id, rank) after ``iters`` power iterations over the distinct
     directed edge list. Self-loops are ignored. Node set = every id
     appearing as src or dst."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    # weighted out-edges: each neighbor receives rank/out_deg
-    out = e.join(deg, "src").select(
-        F.col("src").alias("id"), "dst", (F.lit(1.0) / F.col("out_deg")).alias("w")
-    ).persist()
-    out.count()
-
-    base = F.lit((1.0 - damping) / n)
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=True)
-    for _ in range(iters):
-        contrib = (
-            ranks.join(out, "id")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("_in"))
-        )
-        ranks = (
-            nodes.join(contrib, "id", "left")
-            .select(
-                "id",
-                (base + F.lit(damping) * F.coalesce("_in", F.lit(0.0))).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    e.unpersist()
-    nodes.unpersist()
-    out.unpersist()
-    return ranks.select("id", F.round("rank", 6).alias("rank"))
+    state, _, _ = _propagate(_edge_list(edges, src, dst), damping, iters)
+    return state.select("id", F.round("rank", 6).alias("rank"))
 
 
 def link_spam_signals(
@@ -180,71 +250,14 @@ def trustrank(
         trust_i+1(x) = (1-d)*1[x in S]/|S|
                        + d * sum over in-neighbors y of trust_i(y)/out_deg(y)
 
-    Same iteration shape (and the same dangling-mass-drops contract)
-    as :func:`pagerank`: one equi-join + one hash agg per round,
-    ``localCheckpoint`` truncating lineage; the seed table is tiny
-    (hand-vetted lists are hundreds of hosts) and broadcast. Only
-    scalar |S| is ever collected.
+    Same iteration (:func:`_propagate`, with the same dangling-mass-drops
+    contract) as :func:`pagerank`, carrying only the trust column; the
+    seed table is tiny (hand-vetted lists are hundreds of hosts) and
+    broadcast. Only scalar |S| is ever collected.
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
-    seed_ids = F.broadcast(
-        seeds.select(F.col(seed_col).alias("id")).distinct()
-        .join(nodes, "id", "semi")
-        .withColumn("_seed", F.lit(1.0))
-    ).persist()
-    n_seeds = seed_ids.count()
-    if n_seeds == 0:
-        raise ValueError("trustrank: no seed appears in the graph")
-    deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    out = e.join(deg, "src").select(
-        F.col("src").alias("id"), "dst",
-        (F.lit(1.0) / F.col("out_deg")).alias("w"),
-    ).persist()
-    out.count()
-
-    def seed_mass(df):
-        return df.join(seed_ids, "id", "left").withColumn(
-            "_base", F.coalesce(F.col("_seed"), F.lit(0.0)) / n_seeds
-        )
-
-    ranks = (
-        seed_mass(nodes)
-        .select("id", F.col("_base").alias("trust"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(iters):
-        contrib = (
-            ranks.join(out, "id")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("trust") * F.col("w")).alias("_in"))
-        )
-        ranks = (
-            seed_mass(nodes.join(contrib, "id", "left"))
-            .select(
-                "id",
-                (
-                    F.lit(1.0 - damping) * F.col("_base")
-                    + F.lit(damping) * F.coalesce("_in", F.lit(0.0))
-                ).alias("trust"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    e.unpersist()
-    nodes.unpersist()
-    out.unpersist()
-    seed_ids.unpersist()
-    return ranks.select("id", F.round("trust", 6).alias("trust"))
+    state, _, _ = _propagate(_edge_list(edges, src, dst), damping, iters,
+                             rank=False, seeds=seeds, seed_col=seed_col)
+    return state.select("id", F.round("trust", 6).alias("trust"))
 
 
 def hits(
@@ -275,18 +288,8 @@ def hits(
     back via broadcast (never collected); ``localCheckpoint`` truncates
     lineage per round exactly like :func:`pagerank`.
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
+    e = _edge_list(edges, src, dst).persist()
+    nodes = _nodes(e).persist()
     nodes.count()
 
     def _normalize(raw, col):
@@ -349,88 +352,20 @@ def spam_mass(
     rel_mass near 1 = rank propped up almost entirely by pages
     unreachable from the good core — the scheduler demotes those
     queues; near 0 = rank flows from vetted seeds. Both iterations run
-    JOINTLY: one state table carries (rank, trust), so each round is
-    ONE out-edge join + ONE hash agg for both measures (half the
-    shuffles of running pagerank then trustrank separately). Same
-    dangling-mass-drops contract and ``localCheckpoint`` lineage
-    truncation as :func:`pagerank`; only scalar N and |S| are ever
-    collected.
+    JOINTLY in :func:`_propagate`: one state table carries (rank,
+    trust), so each round is ONE out-edge join + ONE hash agg for both
+    measures (half the shuffles of running pagerank then trustrank
+    separately). Only scalar N and |S| are ever collected.
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    seed_ids = F.broadcast(
-        seeds.select(F.col(seed_col).alias("id")).distinct()
-        .join(nodes, "id", "semi")
-        .withColumn("_seed", F.lit(1.0))
-    ).persist()
-    n_seeds = seed_ids.count()
-    if n_seeds == 0:
-        raise ValueError("spam_mass: no seed appears in the graph")
-    deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    out = e.join(deg, "src").select(
-        F.col("src").alias("id"), "dst",
-        (F.lit(1.0) / F.col("out_deg")).alias("w"),
-    ).persist()
-    out.count()
-
-    def seed_base(df):
-        return df.join(seed_ids, "id", "left").withColumn(
-            "_base", F.coalesce(F.col("_seed"), F.lit(0.0)) / n_seeds
-        )
-
-    state = (
-        seed_base(nodes)
-        .select("id", F.lit(1.0 / n).alias("rank"),
-                F.col("_base").alias("trust"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(iters):
-        contrib = (
-            state.join(out, "id")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(
-                F.sum(F.col("rank") * F.col("w")).alias("_r"),
-                F.sum(F.col("trust") * F.col("w")).alias("_t"),
-            )
-        )
-        state = (
-            seed_base(nodes.join(contrib, "id", "left"))
-            .select(
-                "id",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.coalesce("_r", F.lit(0.0))
-                ).alias("rank"),
-                (
-                    F.lit(1.0 - damping) * F.col("_base")
-                    + F.lit(damping) * F.coalesce("_t", F.lit(0.0))
-                ).alias("trust"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    state, n, n_seeds = _propagate(_edge_list(edges, src, dst), damping,
+                                   iters, seeds=seeds, seed_col=seed_col)
     good = F.col("trust") * F.lit(n_seeds / n)
-    res = state.select(
+    return state.select(
         "id",
         F.round("rank", 6).alias("rank"),
         F.round(good, 6).alias("good_rank"),
         F.round((F.col("rank") - good) / F.col("rank"), 6).alias("rel_mass"),
     )
-    e.unpersist()
-    nodes.unpersist()
-    out.unpersist()
-    seed_ids.unpersist()
-    return res
 
 
 def opic(
@@ -468,18 +403,8 @@ def opic(
     lineage. ``virtual_id`` must not collide with a real node id (use
     e.g. the empty string for string-keyed host graphs).
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
+    e = _edge_list(edges, src, dst).persist()
+    nodes = _nodes(e).persist()
     n = nodes.count()
     deg = e.groupBy("src").agg(F.count("*").alias("d"))
     vlit = F.lit(virtual_id)
@@ -562,11 +487,7 @@ def cocitation_pairs(
     never materializes its full pair square). The groupBy counts
     distinct-by-construction rows — no count_distinct shuffle.
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    e = _edge_list(edges, src, dst)
     if max_out is not None:
         rn = F.row_number().over(W.partitionBy("src").orderBy("dst"))
         e = e.withColumn("_rn", rn).filter(F.col("_rn") <= max_out).drop("_rn")
@@ -626,52 +547,16 @@ def hop_depth(
     depth is also the standard prioritizer tie-breaker (shallow pages
     first).
 
-    Distributed BFS, one superstep per level: frontier ⨝ edges →
-    candidate dsts → anti-join against visited → next frontier at
-    depth d+1. ``max_depth`` is single-digit by crawl contract, so D
-    sequential equi-joins are the right shape — pointer doubling (the
-    redirects/CC trick) materializes a k-hop PAIR map, which is |V|²
-    for anything dense, while each BFS round here is bounded by |V|
-    rows and |E| join width. Every round localCheckpoints (iterative
-    lineage would otherwise double per level) and the loop early-stops
-    the superstep after the frontier empties — a graph that saturates
-    at depth 3 costs 3 joins, not max_depth.
-
-    Seeds not present in the edge list still report depth 0; nodes
-    unreachable within max_depth are absent (the caller's histogram
-    reads absence as "beyond horizon / not discovered").
+    This is :func:`seed_attribution`'s BFS with the seed label
+    dropped: the set of nodes first reached at level d does not depend
+    on which seed reaches them. Seeds not present in the edge list
+    still report depth 0; nodes unreachable within ``max_depth`` are
+    absent (the caller's histogram reads absence as "beyond horizon /
+    not discovered").
     """
-    e = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .filter(F.col("_s") != F.col("_d"))
-        .distinct()
-        .persist()
-    )
-    e.count()
-    visited = (
-        seeds.select(F.col(id_col).alias("id"))
-        .distinct()
-        .withColumn("depth", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    for d in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier["id"] == e["_s"])
-            .select(F.col("_d").alias("id"))
-            .distinct()
-        )
-        new = (
-            nxt.join(visited, "id", "left_anti")
-            .withColumn("depth", F.lit(d))
-            .localCheckpoint(eager=True)
-        )
-        if not new.take(1):
-            break
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    e.unpersist()
-    return visited
+    return seed_attribution(
+        edges, seeds, max_depth, src, dst, id_col
+    ).select("id", "depth")
 
 
 def seed_attribution(
@@ -688,20 +573,24 @@ def seed_attribution(
     lineage readout behind per-seed budget attribution ("which seeds
     actually earn the corpus") and seed-list pruning.
 
-    Same superstep shape as :func:`hop_depth` (level-at-a-time BFS,
-    anti-join vs visited, localCheckpoint per round, early stop), with
-    the frontier carrying its attributed seed and each new node taking
-    ``min(seed)`` over its level-d-1 in-neighbors. Because min is
-    associative and propagation adds exactly one hop per level, this
-    equals the global argmin over all (path length, origin seed) pairs
-    — which is what the DuckDB oracle computes from the raw path set.
+    Distributed BFS, one superstep per level: frontier ⨝ edges →
+    candidate dsts, each taking ``min(seed)`` over its level-d-1
+    in-neighbors → anti-join against visited → next frontier at depth
+    d. ``max_depth`` is single-digit by crawl contract, so D sequential
+    equi-joins are the right shape — pointer doubling (the
+    redirects/CC trick) materializes a k-hop PAIR map, which is |V|²
+    for anything dense, while each BFS round here is bounded by |V|
+    rows and |E| join width. Every round localCheckpoints (iterative
+    lineage would otherwise double per level), and the loop stops at
+    the first level that adds no node — a graph that saturates at
+    depth 3 costs 3 joins, not max_depth.
+
+    Because min is associative and propagation adds exactly one hop
+    per level, the label equals the global argmin over all (path
+    length, origin seed) pairs — which is what the DuckDB oracle
+    computes from the raw path set.
     """
-    e = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .filter(F.col("_s") != F.col("_d"))
-        .distinct()
-        .persist()
-    )
+    e = _edge_list(edges, src, dst, "_s", "_d").persist()
     e.count()
     visited = (
         seeds.select(F.col(id_col).alias("id"))
@@ -797,11 +686,7 @@ def reciprocity_stats(
     map-combinable host agg. No window, no cap needed (join
     cardinality <= |edges|).
     """
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
+    e = _edge_list(edges, src, dst, "s", "d")
     rev = e.select(F.col("d").alias("s"), F.col("s").alias("d"),
                    F.lit(1).alias("_r"))
     marked = e.join(rev, ["s", "d"], "left")

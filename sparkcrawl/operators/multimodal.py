@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkcrawl.operators.sampling import _bucketed_prefix_sum, _hash_buckets
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType(), False),
@@ -407,28 +409,19 @@ def pack_multimodal_sequences(
 
     Plan at scale: spans are exploded once (posexplode, codegen); the
     global start position is the SAME two-phase distributed prefix sum
-    as token_balanced_shards — per-bucket totals (hash agg over
-    ``n_buckets`` rows) + a window over the bounded aggregate,
-    broadcast back, then a per-bucket running sum ordered by
-    (hash, doc, span_idx). Bucketing uses a PREFIX of the document
-    hash, so a document's spans stay contiguous in the global order.
+    as token_balanced_shards (``sampling._bucketed_prefix_sum``) —
+    per-bucket totals (hash agg over ``n_buckets`` rows) + a window
+    over the bounded aggregate, broadcast back, then a per-bucket
+    running sum ordered by (hash, doc, span_idx). Bucketing uses a
+    PREFIX of the document hash, so a document's spans stay contiguous
+    in the global order.
     Piece rows are pure per-row arithmetic (explode(sequence(...))) —
     no further shuffle. Associativity of + pins the decomposition to
     the single-global-window oracle.
     """
-    from pyspark.sql.window import Window
-
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))), 1, 8
-        ),
-        16, 10,
-    ).cast("bigint")
-    bucket_width = (1 << 32) // n_buckets
     spans = docs_spans.select(
         F.col(id_col),
-        h.alias("_h"),
-        (h / F.lit(bucket_width)).cast("int").alias("_bucket"),
+        *_hash_buckets(id_col, salt, n_buckets),
         F.posexplode("spans").alias("span_idx", "_s"),
     ).select(
         id_col,
@@ -442,26 +435,9 @@ def pack_multimodal_sequences(
         .cast("bigint")
         .alias("n_tokens"),
     ).filter(F.col("n_tokens") > 0)
-    totals = spans.groupBy("_bucket").agg(F.sum("n_tokens").alias("_btok"))
-    offsets = totals.select(
-        "_bucket",
-        F.coalesce(
-            F.sum("_btok").over(
-                Window.orderBy("_bucket").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
-        ).alias("_offset"),
-    )
-    cum = F.sum("n_tokens").over(
-        Window.partitionBy("_bucket")
-        .orderBy("_h", id_col, "span_idx")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    pos, end = _bucketed_prefix_sum(spans, id_col, "span_idx")
     pos = (
-        spans.join(F.broadcast(offsets), "_bucket")
-        .withColumn("_end", (F.col("_offset") + cum).cast("bigint"))
+        pos.withColumn("_end", end.cast("bigint"))
         .withColumn("start", (F.col("_end") - F.col("n_tokens")).cast("bigint"))
     )
     first_ex = F.floor(F.col("start") / F.lit(seq_len)).cast("bigint")

@@ -12,7 +12,7 @@ DuckDB for the oracle harness.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _BUCKETS = 1_000_000
@@ -25,11 +25,60 @@ def _unit_bucket(id_col: Column, salt: str) -> Column:
     CAST(concat('0x', substr(md5(salt || id), 1, 8)) AS BIGINT)
       % 1000000 / 1000000.0
     """
-    h = F.conv(
+    return (_salted_hash(id_col, salt) % _BUCKETS) / F.lit(float(_BUCKETS))
+
+
+def _salted_hash(id_col: Column, salt: str) -> Column:
+    """The first 8 md5 hex chars of salt||id as a bigint in [0, 2^32)."""
+    return F.conv(
         F.substring(F.md5(F.concat(F.lit(salt), id_col.cast("string"))), 1, 8),
         16, 10,
     ).cast("bigint")
-    return (h % _BUCKETS) / F.lit(float(_BUCKETS))
+
+
+def _hash_buckets(id_col: str, salt: str, n_buckets: int) -> list[Column]:
+    """``[_h, _bucket]``: the salted hash of ``id_col`` and its top
+    bits as one of ``n_buckets`` buckets. The bucket is a PREFIX of the
+    order key ``(_h, id)``, so bucket order is global order."""
+    h = _salted_hash(F.col(id_col), salt)
+    return [h.alias("_h"),
+            (h / F.lit((1 << 32) // n_buckets)).cast("int").alias("_bucket")]
+
+
+def _bucketed_prefix_sum(rows: DataFrame, *order: str) -> tuple[DataFrame, Column]:
+    """Two-phase distributed prefix sum of ``n_tokens`` in the global
+    order ``(_h, *order)`` over rows carrying :func:`_hash_buckets`.
+
+    A global ordered running sum is a single-partition window —
+    unusable at corpus scale. Instead: per-bucket totals via one hash
+    agg (n_buckets rows), their exclusive prefix sums via a window
+    over that BOUNDED aggregate, broadcast back as each bucket's
+    offset; within each bucket a windowed running sum over
+    ~rows/n_buckets rows (spillable sort, and ``n_buckets`` is the
+    knob — raise it with the corpus). Associativity of + makes the
+    result equal the one global scan.
+
+    Returns ``rows`` joined with their bucket's ``_offset`` and the
+    inclusive running total (a Column over that join).
+    """
+    totals = rows.groupBy("_bucket").agg(F.sum("n_tokens").alias("_btok"))
+    offsets = totals.select(
+        "_bucket",
+        F.coalesce(
+            F.sum("_btok").over(
+                Window.orderBy("_bucket").rowsBetween(
+                    Window.unboundedPreceding, -1
+                )
+            ),
+            F.lit(0),
+        ).alias("_offset"),
+    )
+    cum = F.sum("n_tokens").over(
+        Window.partitionBy("_bucket")
+        .orderBy("_h", *order)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return rows.join(F.broadcast(offsets), "_bucket"), F.col("_offset") + cum
 
 
 def hash_split(
@@ -128,8 +177,6 @@ def weighted_mixture_sample(
     Returns docs filtered to the mix, plus ``mix_rank`` (1-based draw
     order within the domain).
     """
-    from pyspark.sql.window import Window
-
     spark = docs.sparkSession
     if isinstance(weights, dict):
         weights = spark.createDataFrame(
@@ -200,64 +247,23 @@ def token_balanced_shards(
     Documents never split across shards; a shard overshoots the target
     by at most one document.
 
-    Scale plan: a global ordered prefix sum is a single-partition
-    window — unusable at corpus scale. Instead the classic two-phase
-    distributed scan, expressed relationally:
-
-    1. ``bucket = h >> k`` (a PREFIX of the order key, so bucket order
-       == global order) splits the corpus into ``n_buckets`` ranges;
-    2. per-bucket token totals via one hash agg (n_buckets rows), their
-       exclusive prefix sums via a window over that BOUNDED aggregate;
-    3. broadcast the offsets back; within each bucket a windowed
-       running sum over ~corpus/n_buckets rows (spillable sort, and
-       ``n_buckets`` is the knob — raise it with the corpus).
-
-    Associativity of + makes the two-phase result equal the one global
-    scan; the DuckDB oracle computes the single global window, pinning
-    the decomposition.
+    Scale plan: :func:`_bucketed_prefix_sum`, the two-phase
+    distributed scan; the DuckDB oracle computes the single global
+    window, pinning the decomposition.
     """
-    from pyspark.sql.window import Window
-
     tok = (
         F.col(tokens_col)
         if tokens_col
         else F.size(F.split(F.col(text_col), " "))
     ).cast("bigint")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))), 1, 8
-        ),
-        16, 10,
-    ).cast("bigint")
-    bucket_width = (1 << 32) // n_buckets
     base = docs.select(
         F.col(id_col),
         tok.alias("n_tokens"),
-        h.alias("_h"),
-        (h / F.lit(bucket_width)).cast("int").alias("_bucket"),
+        *_hash_buckets(id_col, salt, n_buckets),
     )
-    totals = base.groupBy("_bucket").agg(F.sum("n_tokens").alias("_btok"))
-    offsets = totals.select(
-        "_bucket",
-        F.coalesce(
-            F.sum("_btok").over(
-                Window.orderBy("_bucket").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
-        ).alias("_offset"),
-    )
-    cum_in_bucket = F.sum("n_tokens").over(
-        Window.partitionBy("_bucket")
-        .orderBy("_h", id_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    pos, end = _bucketed_prefix_sum(base, id_col)
     return (
-        base.join(F.broadcast(offsets), "_bucket")
-        .withColumn(
-            "start_tokens", F.col("_offset") + cum_in_bucket - F.col("n_tokens")
-        )
+        pos.withColumn("start_tokens", end - F.col("n_tokens"))
         .withColumn(
             "shard",
             (F.col("start_tokens") / F.lit(target_tokens)).cast("int"),
@@ -344,8 +350,6 @@ def domain_mixing_weights(
     to normalize — bounded by the domain-count contract, never by the
     corpus (same rationale as the queue-stats windows, schedule.py).
     """
-    from pyspark.sql.window import Window
-
     agg = docs.groupBy(F.col(strata_col).alias("source")).agg(
         F.count("*").alias("n_docs"),
         F.sum(F.size(F.split(F.col(text_col), " "))).alias("tokens"),
@@ -390,11 +394,7 @@ def weighted_reservoir_sample(
     Returns the sampled rows + ``ares_key`` (round 9dp, display only;
     ranking uses the raw double) + ``sample_rank`` (1-based).
     """
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))), 1, 8),
-        16, 10,
-    ).cast("bigint")
+    h = _salted_hash(F.col(id_col), salt)
     u = (h % _BUCKETS + F.lit(0.5)) / F.lit(float(_BUCKETS))
     w = F.col(weight_col).cast("double")
     keyed = (

@@ -30,9 +30,11 @@ from sparkcrawl.sources.store import FrontierTable, LinkEdgesTable
 def host_ranks(spark: SparkSession, workdir: str,
                damping: float = 0.85, iters: int = 10,
                method: str = "pagerank") -> DataFrame | None:
-    """(host, rank) over the accumulated link-edges graph, or None if
-    nothing was recorded yet. Edge weight = total link count (the
-    graph is re-aggregated across supersteps before ranking).
+    """(host, rank) over the distinct host-edge set of the accumulated
+    link-edges graph, or None if nothing was recorded yet. Ranks are
+    unweighted: an edge counts once however many links (``n_links``)
+    or supersteps recorded it — both rank operators take the distinct
+    (src_host, dst_host) pairs themselves.
 
     ``method``: ``pagerank`` (default) or ``opic`` — OPIC (Abiteboul
     et al. WWW'03) is the crawl-native estimator: no damping knob, a
@@ -43,19 +45,17 @@ def host_ranks(spark: SparkSession, workdir: str,
     edges = LinkEdgesTable(workdir).read(spark)
     if edges is None:
         return None
-    flat = (
-        edges.groupBy("src_host", "dst_host")
-        .agg(F.sum("n_links").alias("n"))
-        .select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"))
-    )
     if method == "opic":
         # host ids are strings; the virtual page needs a non-colliding
         # id in the same type (no real host is the empty string)
         return (
-            opic(flat, iters=iters, virtual_id="")
+            opic(edges, iters=iters, src="src_host", dst="dst_host",
+                 virtual_id="")
             .withColumnsRenamed({"id": "host", "importance": "rank"})
         )
-    return pagerank(flat, damping=damping, iters=iters).withColumnRenamed("id", "host")
+    return pagerank(
+        edges, damping=damping, iters=iters, src="src_host", dst="dst_host"
+    ).withColumnRenamed("id", "host")
 
 
 def host_percent_rank(df: DataFrame, order: list, out: str = "_pr") -> DataFrame:

@@ -562,11 +562,14 @@ def test_prefix_filter_plan_no_cartesian_no_python(spark, queries):
 
 
 def test_graph_iterations_stay_relational(spark, queries):
-    """HITS / spam-mass rounds: equi-joins + hash aggs only — no
-    Python eval, no cross products; normalization totals come in via
+    """Every query on the shared link-graph core (propagation, HITS,
+    OPIC, co-citation, BFS): equi-joins + hash aggs only — no Python
+    eval, no cross products; normalization totals come in via
     broadcast joins, not collects."""
-    for key in ("graph_hits", "graph_spam_mass", "graph_opic",
-                "graph_cocitation", "graph_coupling"):
+    for key in ("graph_host_rank", "graph_trustrank", "graph_hits",
+                "graph_spam_mass", "graph_opic", "graph_cocitation",
+                "graph_coupling", "crawl_hop_depth",
+                "crawl_seed_attribution"):
         p = plan_of(queries[key](spark, SF))
         assert "CartesianProduct" not in p, key
         assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, key

@@ -5,7 +5,8 @@ run through one Spark action, so max_examples stays small while input
 coverage stays wide.
 """
 
-from hypothesis import given, settings
+import pytest
+from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -359,3 +360,71 @@ def test_bucket_local_lsh_pairs_match_self_join(spark, rows):
             bucket = sorted(got.get((cfg, "bucket"), []))
             assert bucket == sorted(got.get((cfg, "self_join"), [])), cfg
             assert len(set((a, b) for a, b, _ in bucket)) == len(bucket)
+
+
+def _bfs_reference(edges, seeds, max_depth):
+    """Level-at-a-time BFS in Python: id -> (depth, min seed among the
+    equally-near seeds), over the distinct edges without self-loops."""
+    out_edges = {}
+    for a, b in set(edges):
+        if a != b:
+            out_edges.setdefault(a, set()).add(b)
+    visited = {s: (0, s) for s in seeds}
+    frontier = dict(visited)
+    for d in range(1, max_depth + 1):
+        cand = {}
+        for u, (_, seed) in frontier.items():
+            for v in out_edges.get(u, ()):
+                cand[v] = min(cand.get(v, seed), seed)
+        frontier = {v: (d, s) for v, s in cand.items() if v not in visited}
+        if not frontier:
+            break
+        visited.update(frontier)
+    return visited
+
+
+@settings(**SETTINGS)
+@given(
+    st.lists(
+        st.lists(st.tuples(st.integers(0, 5), st.integers(0, 5)),
+                 min_size=4, max_size=16),
+        min_size=4, max_size=8,
+    ),
+    st.lists(st.integers(0, 7), min_size=2, max_size=4),
+)
+def test_graph_core_operators_agree(spark, graphs, seed_ids):
+    """The link-graph operators that share one propagation and one BFS
+    agree on random small graphs with repeated edges, self-loops and
+    seeds outside the graph (relative ids 6 and 7 never have an edge):
+    pagerank equals spam_mass's rank to 1e-6 (spam_mass raises when no
+    seed is in the graph), seed_attribution matches a Python BFS, and
+    hop_depth is seed_attribution without the seed. The example's
+    graphs run as one disjoint union (graph k's ids shifted by 10k);
+    several graphs and seeds per example make equally-near seeds, the
+    case the min-seed rule decides, likely in every example."""
+    from sparkcrawl.operators import graph
+
+    edges = [(10 * k + a, 10 * k + b)
+             for k, g in enumerate(graphs) for a, b in g]
+    seeds = sorted({10 * k + s for k in range(len(graphs)) for s in seed_ids})
+    nodes = {x for a, b in edges if a != b for x in (a, b)}
+    assume(nodes)
+    e = spark.createDataFrame(edges, "src long, dst long")
+    s = spark.createDataFrame([(x,) for x in seeds], "id long")
+
+    pr = {r["id"]: r["rank"] for r in graph.pagerank(e, iters=2).collect()}
+    assert set(pr) == nodes
+    if nodes & set(seeds):
+        sm = {r["id"]: r["rank"]
+              for r in graph.spam_mass(e, s, iters=2).collect()}
+        assert sm == pytest.approx(pr, abs=1e-6)
+    else:
+        with pytest.raises(ValueError):
+            graph.spam_mass(e, s, iters=2)
+
+    attr = {r["id"]: (r["depth"], r["seed"]) for r in
+            graph.seed_attribution(e, s, max_depth=3).collect()}
+    assert attr == _bfs_reference(edges, seeds, 3)
+    depth = {r["id"]: r["depth"] for r in
+             graph.hop_depth(e, s, max_depth=3).collect()}
+    assert depth == {k: d for k, (d, _) in attr.items()}

@@ -69,6 +69,36 @@ def test_refresh_with_opic_signal(spark, mini_cfg, mini_web, tmp_path):
     assert all(1 <= p <= cfg.num_priorities for p in pr)
 
 
+def test_host_ranks_ignore_link_counts_and_repeated_edges(spark, tmp_path):
+    """host_ranks ranks the distinct host-edge set: a larger n_links or
+    the same edge recorded again (in a later superstep, or twice in
+    one) moves no host's rank, for either method."""
+    from sparkcrawl.sources.store import LinkEdgesTable
+
+    pairs = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")]
+    schema = "src_host string, dst_host string, n_links long, superstep int"
+
+    def record(name, steps):
+        wd = str(tmp_path / name)
+        for step, rows in steps.items():
+            LinkEdgesTable(wd).append(spark.createDataFrame(
+                [(s, d, n, step) for s, d, n in rows], schema), step)
+        return wd
+
+    plain = record("plain", {1: [(s, d, 1) for s, d in pairs]})
+    heavy = record("heavy", {
+        1: [(s, d, 7 * i + 2) for i, (s, d) in enumerate(pairs)],
+        2: [("a", "b", 3), ("a", "b", 5), ("d", "a", 40)],
+    })
+    for method in ("pagerank", "opic"):
+        want = {r["host"]: r["rank"]
+                for r in host_ranks(spark, plain, method=method).collect()}
+        got = {r["host"]: r["rank"]
+               for r in host_ranks(spark, heavy, method=method).collect()}
+        assert got == want, method
+        assert len(set(want.values())) > 1, method
+
+
 def test_host_percent_rank_matches_window_and_stays_partitioned(spark):
     """host_percent_rank must equal percent_rank() row-for-row (ties
     included) AND plan only PARTITIONED windows — the 100-TB guard for
